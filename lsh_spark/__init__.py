@@ -11,7 +11,12 @@ Public API (see README.md for the full tour):
         lsh_similarity_join, lsh_self_dedup_pairs, lsh_dedup_keep_first)
 """
 
-from .functions.lsh import (
+from .plans import zipcache as _zipcache
+
+# before any library UDF runs in a Python worker: see plans/zipcache.py
+_zipcache.install()
+
+from .functions.lsh import (  # noqa: E402
     lsh_euclidean,
     lsh_euclidean32,
     lsh_jaccard,
@@ -20,8 +25,8 @@ from .functions.lsh import (
     lsh_min32_shingles,
     lsh_min_shingles,
 )
-from .functions.register import register_all
-from .plans.session import get_spark
+from .functions.register import register_all  # noqa: E402
+from .plans.session import get_spark  # noqa: E402
 
 __all__ = [
     "get_spark",

@@ -46,14 +46,6 @@ def fx_add(state: int, word: int) -> int:
     return (state * K) & MASK64
 
 
-def fx_hash_words(words) -> int:
-    """FxHash64 of a sequence of 64-bit words (each already zero-extended)."""
-    state = 0
-    for w in words:
-        state = fx_add(state, w)
-    return state
-
-
 def fx_hash_char_slice(chars: str) -> int:
     """Hash of a Rust ``&[char]`` slice: usize length prefix, then each
     Unicode scalar value as u32.  Returns the full u64."""
@@ -73,9 +65,3 @@ def fx_add_np(state: np.ndarray, word) -> np.ndarray:
     state = (state << _U5) | (state >> _U59)
     state = state ^ word
     return state * _K_U64
-
-
-def fx_hash_u64_pair_np(first, second) -> np.ndarray:
-    """FxHash64 of two words, vectorized (e.g. seed then shingle)."""
-    z = np.zeros(1, dtype=np.uint64) if np.isscalar(first) else np.zeros_like(first)
-    return fx_add_np(fx_add_np(z, first), second)

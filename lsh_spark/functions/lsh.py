@@ -260,64 +260,141 @@ def lsh_euclidean_bands_long(col, bucket_width: float, band_count: int,
 
 
 # --- shingle-set materialization (compute each doc's set once, reuse) ------
+#
+# Storage contract of every set column: each row's sorted-unique u32
+# shingle hashes, stored as int32 (bit-reinterpreted — halves the bytes
+# that flow through pair joins; sorted in the signed view, consistently on
+# both producer and consumer).  The four shingle modes differ only in the
+# per-row hash segments they produce; ``_sorted_sets`` applies the shared
+# sort-unique tail.
 
-def shingle_set_col(col, ngram_width: int) -> Column:
-    """Materialize the char-ngram shingle set as a column: sorted unique
-    u32 hashes stored as int32 (bit-reinterpreted — halves the bytes that
-    flow through pair joins; sorted in the signed view, consistently on
-    both producer and consumer).  Lets pair-heavy operators (similarity
-    join, dedup) hash each document ONCE instead of once per candidate
-    pair."""
-    from pyspark.sql.types import IntegerType
+def _word_grams(toks, width: int) -> "list[list[str]]":
+    return [[" ".join(ws[i:i + width]) for i in range(len(ws) - width + 1)]
+            for ws in toks]
 
+
+def _shingle_hashes(texts, shingle: str, width: int):
+    """(u32 hashes as uint64, per-row offsets) of one batch of non-null
+    texts under a shingle mode:
+
+    * ``char``: char ``width``-grams (``shingleset.rs`` text path);
+    * ``word``: word ``width``-grams, FxHash of each ``"w1 w2"`` string.
+      ONE tokenizer contract across the Python kernel, the JVM
+      ``_with_word_bigrams`` expression and the DuckDB oracle: tokens
+      are maximal runs of non-whitespace where whitespace is the ASCII
+      class [ \\t\\n\\x0b\\f\\r] (= Java regex \\s), empty tokens dropped;
+      NBSP and other Unicode spaces are NOT separators
+      (tests/test_edge_cases.py pins leading-tab and NBSP inputs);
+    * ``weighted``: tf-weighted replication — occurrence k of a word is
+      the shingle ``"word k"`` (injective: words contain no whitespace),
+      so plain Jaccard over the set is the weighted Jaccard
+      ``Σ min(tf) / Σ max(tf)`` (``width`` unused);
+    * ``weighted_word``: the same reduction over word ``width``-grams,
+      ``"w1 .. wn k"``.
+
+    The weighted modes hash the occurrence strings directly
+    (``weighted_occurrence_hashes``, pinned bit-identical to the
+    composed-string mirror ``_replicated_shingles``)."""
     from .._core.batch import (batch_window_hashes, flatten_texts,
-                               segment_unique_int32_rows)
+                               hash_string_lists, tokenize_words,
+                               weighted_occurrence_hashes)
+
+    if shingle == "char":
+        return batch_window_hashes(*flatten_texts(texts), width)
+    toks = tokenize_words(texts)
+    if shingle == "word":
+        return hash_string_lists(_word_grams(toks, width))
+    if shingle == "weighted":
+        return weighted_occurrence_hashes(toks)
+    return weighted_occurrence_hashes(_word_grams(toks, width))
+
+
+_SHINGLE_MODES = ("char", "word", "weighted", "weighted_word")
+
+
+def _sorted_sets(s: pd.Series, shingle: str, width: int):
+    """Text batch → (flat sorted-unique int32 values, row bounds, valid
+    mask); NULL rows get empty segments."""
+    from .._core.batch import segment_unique_int32
+
+    mask = s.notna().to_numpy()
+    hashes, offs = _shingle_hashes(
+        ["" if not ok else t for t, ok in zip(s, mask)], shingle, width)
+    vals, bounds = segment_unique_int32(
+        hashes.astype(np.uint32).view(np.int32), offs)
+    return vals, bounds, mask
+
+
+def _set_rows(vals: np.ndarray, bounds: np.ndarray, mask) -> pd.Series:
+    """Per-row int32 ndarray views (never Python lists — per-element
+    boxing was the measured hot spot: 2.4x at the 5000-doc batch shape);
+    masked rows yield None."""
+    return pd.Series([vals[bounds[i]:bounds[i + 1]] if ok else None
+                      for i, ok in enumerate(mask)], dtype=object)
+
+
+def _set_col(col, shingle: str, width: int) -> Column:
+    from pyspark.sql.types import IntegerType
 
     @pandas_udf(ArrayType(IntegerType()))
     def _udf(s: pd.Series) -> pd.Series:
-        mask = s.notna().to_numpy()
-        texts = ["" if not ok else t for t, ok in zip(s, mask)]
-        hashes, offs = batch_window_hashes(*flatten_texts(texts), ngram_width)
-        h32 = hashes.astype(np.uint32).view(np.int32)
-        return pd.Series(segment_unique_int32_rows(h32, offs, mask),
-                         dtype=object)
+        return _set_rows(*_sorted_sets(s, shingle, width))
 
     return _udf(col)
 
 
+def shingle_set_col(col, ngram_width: int) -> Column:
+    """Materialize the char-ngram shingle set as a column (sorted unique
+    u32 hashes stored as int32).  Lets pair-heavy operators (similarity
+    join, dedup) hash each document ONCE instead of once per candidate
+    pair."""
+    return _set_col(col, "char", ngram_width)
+
+
 def word_shingle_set_col(col, width: int = 2) -> Column:
     """Materialize the WORD-ngram shingle set (default bigrams) as sorted
-    unique int32 — FxHash-u32 of each ``"w1 w2"`` shingle string, the
-    ``from_shingles`` hashing path (``shingleset.rs:12-22``).  Same storage
-    contract as :func:`shingle_set_col`, so every downstream pair operator
-    (banding, size pruning, batch-Jaccard verify) works unchanged."""
-    import re
+    unique int32 — FxHash-u32 of each ``"w1 w2"`` shingle string.  Same
+    storage contract as :func:`shingle_set_col`, so every downstream pair
+    operator (banding, size pruning, batch-Jaccard verify) works
+    unchanged."""
+    return _set_col(col, "word", width)
 
-    from pyspark.sql.types import IntegerType
 
-    from .._core.batch import hash_strings_batch
+def shingle_set_bands_col(col, shingle: str, ngram_width: int,
+                          band_count: int, band_size: int,
+                          seeds: "tuple[int, ...]") -> Column:
+    """``struct<set: array<int>, bands: array<bigint>>`` in ONE Arrow
+    pass: each row's shingle set (the set-column storage contract) and
+    its banded MinHash as int64 two's complement, computed from the same
+    sorted-unique u32 values — bit-identical to
+    :func:`minhash_bands_from_set` over the set (a per-seed minimum over
+    the set equals the minimum over the window multiset).  Several seeds
+    concatenate in seed order, so element ``rot * band_count + i`` is
+    band ``i`` of rotation ``rot`` — the fused ``band_idx`` of the
+    seed-rotation join.  NULL text → NULL set and bands."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
-    # ONE tokenizer contract across all three word-shingle paths (this
-    # Python kernel, the JVM ``_with_word_bigrams`` expression, and the
-    # DuckDB oracle): tokens are maximal runs of non-whitespace where
-    # whitespace is the ASCII class [ \t\n\x0b\f\r] (= Java regex \s =
-    # Python re.ASCII \s), empty tokens dropped.  NBSP and other Unicode
-    # spaces are NOT separators anywhere, so the three paths agree on any
-    # input, not just clean test text (tests/test_edge_cases.py pins
-    # leading-tab and NBSP inputs).
-    ws = re.compile(r"\s+", re.ASCII)
+    from .._core.batch import minhash_from_window_hashes
 
-    @pandas_udf(ArrayType(IntegerType()))
-    def _udf(s: pd.Series) -> pd.Series:
-        mask = s.notna().to_numpy()
-        shingle_lists = []
-        for t, ok in zip(s, mask):
-            toks = [x for x in ws.split(t)] if ok and t else []
-            toks = [x for x in toks if x]
-            shingle_lists.append(
-                [" ".join(toks[i:i + width])
-                 for i in range(len(toks) - width + 1)])
-        return _rows_to_unique_hash_sets(shingle_lists, mask)
+    if shingle not in _SHINGLE_MODES:
+        # a typo silently falling back to char shingles would return a
+        # materially different retention set at the caller's threshold
+        raise ValueError(
+            f"unknown shingle mode {shingle!r}: expected 'char', 'word', "
+            "'weighted' or 'weighted_word'")
+    out_type = StructType([StructField("set", ArrayType(IntegerType())),
+                           StructField("bands", _LONG_ARRAY)])
+
+    @pandas_udf(out_type)
+    def _udf(s: pd.Series) -> pd.DataFrame:
+        vals, bounds, mask = _sorted_sets(s, shingle, ngram_width)
+        u = vals.view(np.uint32).astype(np.uint64)
+        mat = np.hstack([
+            minhash_from_window_hashes(u, bounds, band_count, band_size, sd)
+            for sd in seeds])
+        return pd.DataFrame({
+            "set": _set_rows(vals, bounds, mask),
+            "bands": _u64_rows_to_long(mat, mask, low32=False)})
 
     return _udf(col)
 
@@ -343,79 +420,21 @@ def _replicated_shingles(toks: "list[list[str]]") -> "list[list[str]]":
     return out
 
 
-def _rows_to_unique_hash_sets(lists: "list[list[str]]", mask) -> pd.Series:
-    """Shared tail of the word/weighted set columns: flat
-    ``from_shingles`` string-hash over the whole batch, then per-row
-    sorted-unique int32 sets (the repo-wide storage contract); masked
-    rows yield None."""
-    from .._core.batch import hash_strings_batch, segment_unique_int32_rows
-
-    flat = [g for lst in lists for g in lst]
-    hashes = (hash_strings_batch(flat).astype(np.uint32).view(np.int32)
-              if flat else np.empty(0, dtype=np.int32))
-    lens = np.fromiter((len(lst) for lst in lists), dtype=np.int64,
-                       count=len(lists))
-    offs = np.zeros(len(lists) + 1, dtype=np.int64)
+def _set_series_flat(s: pd.Series):
+    """Set-column batch → (flat u32 values as uint64, row offsets, valid
+    mask).  Same null idiom as ``_minhash_shingle_mat``: some
+    Arrow/pandas versions deliver array nulls as float NaN, not None."""
+    mask = np.array([v is not None and not isinstance(v, float) for v in s],
+                    dtype=bool)
+    lens = np.array([len(v) if ok else 0 for v, ok in zip(s, mask)],
+                    dtype=np.int64)
+    offs = np.zeros(len(s) + 1, dtype=np.int64)
     np.cumsum(lens, out=offs[1:])
-    return pd.Series(segment_unique_int32_rows(hashes, offs, mask),
-                     dtype=object)
-
-
-def weighted_shingle_set_col(col) -> Column:
-    """Materialize the tf-WEIGHTED replicated shingle set as a column:
-    sorted unique u32 string-hashes of ``"word k"`` occurrence strings
-    (k = 1..tf per word), stored as int32 — the SAME storage contract as
-    ``shingle_set_col``/``word_shingle_set_col``, so the entire pair
-    machinery (banding from sets, id-only blocking, broadcast verify)
-    composes unchanged, and plain Jaccard over these sets equals the
-    weighted Jaccard ``Σ min(tf)/Σ max(tf)``.  Hashes come straight
-    from ``weighted_occurrence_hashes`` (no composed strings)."""
-    from pyspark.sql.types import IntegerType
-
-    from .._core.batch import (segment_unique_int32_rows, tokenize_words,
-                               weighted_occurrence_hashes)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def _udf(s: pd.Series) -> pd.Series:
-        mask = s.notna().to_numpy()
-        hashes, offs = weighted_occurrence_hashes(
-            tokenize_words(["" if not ok else t for t, ok in zip(s, mask)]))
-        h32 = hashes.astype(np.uint32).view(np.int32)
-        return pd.Series(segment_unique_int32_rows(h32, offs, mask),
-                         dtype=object)
-
-    return _udf(col)
-
-
-def weighted_word_shingle_set_col(col, width: int = 2) -> Column:
-    """tf-weighted WORD-``width``-GRAM replicated shingle set: the
-    replication reduction composed with n-gram shingling — occurrence k
-    of an n-gram string ``"w1 .. wn"`` contributes ``"w1 .. wn k"``
-    (injective for fixed ``width``: the count is always the last
-    whitespace-delimited token of exactly ``width + 1``), so plain
-    Jaccard over these sets equals the WEIGHTED n-gram Jaccard
-    ``Σ min(tf)/Σ max(tf)`` over n-gram multisets.  Same
-    sorted-unique-int32 storage contract as every other shingle mode;
-    hashes come straight from ``weighted_occurrence_hashes`` over the
-    composed n-gram strings (no occurrence-string materialization)."""
-    from pyspark.sql.types import IntegerType
-
-    from .._core.batch import (segment_unique_int32_rows, tokenize_words,
-                               weighted_occurrence_hashes)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def _udf(s: pd.Series) -> pd.Series:
-        mask = s.notna().to_numpy()
-        toks = tokenize_words(["" if not ok else t
-                               for t, ok in zip(s, mask)])
-        grams = [[" ".join(ws[i:i + width])
-                  for i in range(len(ws) - width + 1)] for ws in toks]
-        hashes, offs = weighted_occurrence_hashes(grams)
-        h32 = hashes.astype(np.uint32).view(np.int32)
-        return pd.Series(segment_unique_int32_rows(h32, offs, mask),
-                         dtype=object)
-
-    return _udf(col)
+    flat = (np.concatenate([np.asarray(v, dtype=np.int32) for v, ok
+                            in zip(s, mask) if ok and len(v)])
+            .view(np.uint32).astype(np.uint64)
+            if lens.sum() else np.empty(0, dtype=np.uint64))
+    return flat, offs, mask
 
 
 def minhash_bands_from_set(col, band_count: int, band_size: int, seed: int) -> Column:
@@ -425,18 +444,7 @@ def minhash_bands_from_set(col, band_count: int, band_size: int, seed: int) -> C
 
     @pandas_udf(_LONG_ARRAY)
     def _udf(s: pd.Series) -> pd.Series:
-        # same null idiom as _minhash_shingle_mat: some Arrow/pandas
-        # versions deliver array nulls as float NaN, not None
-        mask = np.array([v is not None and not isinstance(v, float)
-                         for v in s], dtype=bool)
-        lens = np.array([len(v) if ok else 0 for v, ok in zip(s, mask)],
-                        dtype=np.int64)
-        offs = np.zeros(len(s) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        flat = (np.concatenate([np.asarray(v, dtype=np.int32) for v, ok
-                                in zip(s, mask) if ok and len(v)])
-                .view(np.uint32).astype(np.uint64)
-                if lens.sum() else np.empty(0, dtype=np.uint64))
+        flat, offs, mask = _set_series_flat(s)
         mat = minhash_from_window_hashes(flat, offs, band_count, band_size, seed)
         return _u64_rows_to_long(mat, mask, low32=False)
 
@@ -459,54 +467,10 @@ def lsh_min_minima_long_from_set(col, band_count: int, band_size: int,
 
     @pandas_udf(_LONG_ARRAY)
     def _udf(s: pd.Series) -> pd.Series:
-        # same null idiom as _minhash_shingle_mat: some Arrow/pandas
-        # versions deliver array nulls as float NaN, not None
-        mask = np.array([v is not None and not isinstance(v, float)
-                         for v in s], dtype=bool)
-        lens = np.array([len(v) if ok else 0 for v, ok in zip(s, mask)],
-                        dtype=np.int64)
-        offs = np.zeros(len(s) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        flat = (np.concatenate([np.asarray(v, dtype=np.int32) for v, ok
-                                in zip(s, mask) if ok and len(v)])
-                .view(np.uint32).astype(np.uint64)
-                if lens.sum() else np.empty(0, dtype=np.uint64))
+        flat, offs, mask = _set_series_flat(s)
         mat = seed_minima_from_window_hashes(flat, offs, band_count,
                                              band_size, seed)
         return _u64_rows_to_long(mat, mask, low32=False)
-
-    return _udf(col)
-
-
-def minhash_bands_from_set_multi(col, band_count: int, band_size: int,
-                                 seeds: "tuple[int, ...]") -> Column:
-    """Banded MinHash for SEVERAL seeds in ONE Arrow pass: the returned
-    array is the per-seed band arrays concatenated in seed order, so
-    element ``rot * band_count + i`` is band ``i`` of rotation ``rot`` —
-    the exact ``band_idx`` layout the seed-rotation join uses.  Fusing
-    the rotations saves one full Arrow round-trip + set-column decode
-    per extra seed (the hashing work itself is per-seed regardless)."""
-    from .._core.batch import minhash_from_window_hashes
-
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
-        # same null idiom as _minhash_shingle_mat: some Arrow/pandas
-        # versions deliver array nulls as float NaN, not None
-        mask = np.array([v is not None and not isinstance(v, float)
-                         for v in s], dtype=bool)
-        lens = np.array([len(v) if ok else 0 for v, ok in zip(s, mask)],
-                        dtype=np.int64)
-        offs = np.zeros(len(s) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        flat = (np.concatenate([np.asarray(v, dtype=np.int32) for v, ok
-                                in zip(s, mask) if ok and len(v)])
-                .view(np.uint32).astype(np.uint64)
-                if lens.sum() else np.empty(0, dtype=np.uint64))
-        mats = [
-            minhash_from_window_hashes(flat, offs, band_count, band_size, sd)
-            for sd in seeds
-        ]
-        return _u64_rows_to_long(np.hstack(mats), mask, low32=False)
 
     return _udf(col)
 

@@ -34,11 +34,6 @@ def url_hosts(col) -> Column:
         F.lower)
 
 
-def url_count(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(URL_HOST_RE), F.lit(1)))
-
-
 def domain_stats(
     docs: DataFrame,
     *,

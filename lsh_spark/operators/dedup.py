@@ -35,17 +35,6 @@ from .._core.batch import hash_strings_batch
 # exact / normalized
 # ---------------------------------------------------------------------------
 
-def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Groups of byte-identical texts: (canonical_id, n_copies)."""
-    return (
-        df.groupBy(text_col)
-        .agg(F.min(id_col).alias("canonical_id"),
-             F.count(F.lit(1)).alias("n_copies"))
-        .where(F.col("n_copies") > 1)
-        .select("canonical_id", "n_copies")
-    )
-
-
 def normalized_text(col) -> Column:
     """Canonical form: lowercase, collapse whitespace, strip."""
     c = F.col(col) if isinstance(col, str) else col

@@ -12,11 +12,12 @@ Spark-first redesign (SURVEY.md §2.4), shaped by what actually dominates at
 scale (measured: shipping texts through the band join was 5-10× the cost of
 everything else):
 
-  1. each side's shingle set is materialized ONCE per row
-     (``shingle_set_col``) and persisted — every later stage reuses it;
-  2. band hashes derive from the sets (no re-shingling) and the blocking
-     join shuffles ONLY (id, band_idx, band_hash) rows — 16 bytes of
-     payload per band, never the text;
+  1. each side's shingle set and its band hashes are built ONCE per row,
+     in one Arrow pass (``shingle_set_bands_col``: the bands come from
+     the set's own values), and persisted — every later stage reuses them;
+  2. the blocking join shuffles ONLY (id, band_idx, band_hash) rows — a
+     JVM explode of the cached bands, 16 bytes of payload per band, never
+     the text;
   3. candidate pairs are de-duplicated as bare id pairs, then shingle sets
      are re-attached by two id-equi-joins (size-gated broadcast: the set
      table ships once per executor while its estimated bytes fit the cap,
@@ -35,10 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.lsh import (
-    minhash_bands_from_set,
-    shingle_set_col,
-)
+from ..functions.lsh import shingle_set_bands_col
 from ..plans.cache import track
 
 # Exact-Jaccard verification (the reference's set ratio,
@@ -420,8 +418,24 @@ def _maybe_broadcast(sets: DataFrame, set_col: str,
 
 
 def _with_sets(df: DataFrame, id_col: str, text_col: str, ngram_width: int,
-               id_alias: str, set_alias: str,
-               shingle: str = "char") -> DataFrame:
+               id_alias: str, set_alias: str, band_count: int,
+               band_size: int, seed, shingle: str = "char") -> DataFrame:
+    """(id, shingle set, ``__bands``) rows: ONE Arrow pass builds each
+    row's set and, from the same sorted-unique values, its band hashes
+    (``shingle_set_bands_col``).  Callers persist the frame before
+    :func:`_band_blocks` reads it, so blocking re-reads no set and runs
+    no Python.
+
+    ``seed`` may be a single int or a sequence of ints — the latter is
+    the reference README's seed-rotation recall booster
+    (``README.md:146-148``: UNION the band join once per rotated seed).
+    Rotations are fused into the band index (``band_idx +
+    rot*band_count``) instead of a separate key column, so the blocking
+    join still shuffles two ints per row and combined recall is
+    1-∏(1-r_i) with zero payload overhead."""
+    seeds = (seed,) if isinstance(seed, int) else tuple(seed)
+    fused = shingle_set_bands_col(F.col("__text"), shingle, ngram_width,
+                                  band_count, band_size, seeds)
     base = df.select(F.col(id_col).alias(id_alias),
                      F.col(text_col).alias("__text"))
     # single-file inputs arrive as one partition; spread the UDF pass over
@@ -429,70 +443,22 @@ def _with_sets(df: DataFrame, id_col: str, text_col: str, ngram_width: int,
     target = df.sparkSession.sparkContext.defaultParallelism
     if base.rdd.getNumPartitions() < target:
         base = base.repartition(target)
-    if shingle == "word":
-        from ..functions.lsh import word_shingle_set_col
-
-        sets = word_shingle_set_col(F.col("__text"), ngram_width)
-    elif shingle == "weighted":
-        # tf-weighted replication: "word k" occurrence shingles, whose
-        # plain Jaccard equals the weighted Jaccard (ngram_width unused)
-        from ..functions.lsh import weighted_shingle_set_col
-
-        sets = weighted_shingle_set_col(F.col("__text"))
-    elif shingle == "weighted_word":
-        # the replication reduction composed with word-n-gram shingles:
-        # plain Jaccard equals the weighted n-gram Jaccard
-        from ..functions.lsh import weighted_word_shingle_set_col
-
-        sets = weighted_word_shingle_set_col(F.col("__text"), ngram_width)
-    elif shingle == "char":
-        sets = shingle_set_col(F.col("__text"), ngram_width)
-    else:
-        # a typo silently falling back to char shingles would return a
-        # materially different retention set at the caller's threshold
-        raise ValueError(
-            f"unknown shingle mode {shingle!r}: expected 'char', 'word', "
-            "'weighted' or 'weighted_word'")
-    return base.select(id_alias, sets.alias(set_alias))
+    return base.select(id_alias, fused.alias("__sb")).select(
+        id_alias, F.col("__sb.set").alias(set_alias),
+        F.col("__sb.bands").alias("__bands"))
 
 
-# measurement flag for the self-join blocks cache (see
-# lsh_self_dedup_pairs / lsh_containment_pairs): module-level so an
-# interleaved A/B harness can flip it inside one session
-_PERSIST_SELF_JOIN_BLOCKS = True
-
-
-def _band_blocks(sets: DataFrame, id_alias: str, set_alias: str,
-                 band_count: int, band_size: int, seed) -> DataFrame:
-    """Exploded (id, band_idx, band_hash) blocking keys.
-
-    ``seed`` may be a single int or a sequence of ints — the latter is the
-    reference README's seed-rotation recall booster (``README.md:146-148``:
-    UNION the band join once per rotated seed).  Rotations are fused into
-    the band index (``band_idx + rot*band_count``) instead of a separate
-    key column, so the blocking join still shuffles two ints per row and
-    combined recall is 1-∏(1-r_i) with zero payload overhead."""
-    seeds = (seed,) if isinstance(seed, int) else tuple(seed)
-    if len(seeds) == 1:
-        bands = minhash_bands_from_set(
-            F.col(set_alias), band_count, band_size, seeds[0])
-    else:
-        # all rotations in ONE Arrow pass; the concatenated layout IS the
-        # fused band index (rot * band_count + i), so a single posexplode
-        # replaces the per-rotation union
-        from ..functions.lsh import minhash_bands_from_set_multi
-
-        bands = minhash_bands_from_set_multi(
-            F.col(set_alias), band_count, band_size, seeds)
-    # posexplode the UDF EXPRESSION directly, never a withColumn alias:
-    # with an attribute child, InferFiltersFromGenerate synthesizes a
-    # size(__bands)>0 filter, the alias re-inlines into it, and the band
-    # UDF evaluates TWICE per reference (plan-verified: two
-    # ArrowEvalPython twins per join side).  A PythonUDF child skips the
-    # inference (SPARK-36715), leaving one evaluation — identical rows
-    # either way (empty/NULL band arrays generate nothing in both forms).
+def _band_blocks(sets: DataFrame, id_alias: str) -> DataFrame:
+    """Exploded (id, band_idx, band_hash) blocking keys — a JVM
+    ``posexplode`` of the ``__bands`` column of a PERSISTED
+    :func:`_with_sets` frame.  The cache is what keeps this Python-free:
+    ``InferFiltersFromGenerate`` adds a ``size(__bands) > 0`` filter for
+    an attribute input, and over an uncached frame that filter would
+    re-inline the set+band UDF and evaluate it a second time (pinned by
+    ``tests/test_plans.py``).  Empty or NULL band arrays generate no
+    rows either way."""
     return sets.select(
-        id_alias, F.posexplode(bands).alias("band_idx", "band_hash"))
+        id_alias, F.posexplode("__bands").alias("band_idx", "band_hash"))
 
 
 def lsh_similarity_join(
@@ -525,14 +491,16 @@ def lsh_similarity_join(
     Returns (left_id, right_id[, jaccard]).
     """
     l_sets = _with_sets(left, left_id, left_text, ngram_width,
-                        "__lid", "__lset", shingle=shingle)
+                        "__lid", "__lset", band_count, band_size, seed,
+                        shingle=shingle)
     r_sets = _with_sets(right, right_id, right_text, ngram_width,
-                        "__rid", "__rset", shingle=shingle)
+                        "__rid", "__rset", band_count, band_size, seed,
+                        shingle=shingle)
     track(l_sets.persist(StorageLevel.MEMORY_AND_DISK))
     track(r_sets.persist(StorageLevel.MEMORY_AND_DISK))
 
-    l_blocks = _band_blocks(l_sets, "__lid", "__lset", band_count, band_size, seed)
-    r_blocks = _band_blocks(r_sets, "__rid", "__rset", band_count, band_size, seed)
+    l_blocks = _band_blocks(l_sets, "__lid")
+    r_blocks = _band_blocks(r_sets, "__rid")
 
     pairs = (
         l_blocks.join(r_blocks, on=["band_idx", "band_hash"], how="inner")
@@ -603,18 +571,11 @@ def lsh_self_dedup_pairs(
 
     Returns (id_a, id_b, jaccard)."""
     sets = _with_sets(df, id_col, text_col, ngram_width, "__id", "__set",
-                      shingle=shingle)
+                      band_count, band_size, seed, shingle=shingle)
     track(sets.persist(StorageLevel.MEMORY_AND_DISK))
     broadcast_sets = (_integer_ids(sets, "__id")
                       and _should_broadcast(sets, "__set", broadcast_sets))
-    blocks = _band_blocks(sets, "__id", "__set", band_count, band_size, seed)
-    if _PERSIST_SELF_JOIN_BLOCKS:
-        # the self-join references the blocks frame TWICE (sides a and b),
-        # so the banding kernel otherwise evaluates once per side; caching
-        # the exploded (id, band_idx, band_hash) frame (~20 B/row — the
-        # same order as the already-persisted sets) halves the per-seed
-        # minima fold, the dominant Python cost of the blocking stage
-        track(blocks.persist(StorageLevel.MEMORY_AND_DISK))
+    blocks = _band_blocks(sets, "__id")
 
     a = blocks.select(F.col("__id").alias("id_a"), "band_idx", "band_hash")
     b = blocks.select(F.col("__id").alias("id_b"), "band_idx", "band_hash")
@@ -679,13 +640,10 @@ def lsh_containment_pairs(
     through the blocking join, sets re-attach by id (the contract).
     Rounding runs in-plan (``F.round`` = half-up = DuckDB round); the
     kernel emits raw IEEE divisions."""
-    sets = _with_sets(df, id_col, text_col, ngram_width, "__id", "__set")
+    sets = _with_sets(df, id_col, text_col, ngram_width, "__id", "__set",
+                      band_count, band_size, seed)
     track(sets.persist(StorageLevel.MEMORY_AND_DISK))
-    blocks = _band_blocks(sets, "__id", "__set", band_count, band_size, seed)
-    if _PERSIST_SELF_JOIN_BLOCKS:
-        # same double-reference as lsh_self_dedup_pairs: cache the blocks
-        # frame so the banding kernel runs once, not once per join side
-        track(blocks.persist(StorageLevel.MEMORY_AND_DISK))
+    blocks = _band_blocks(sets, "__id")
     a = blocks.select(F.col("__id").alias("id_a"), "band_idx", "band_hash")
     b = blocks.select(F.col("__id").alias("id_b"), "band_idx", "band_hash")
     pairs = (
@@ -849,13 +807,12 @@ def lsh_edit_distance_pairs(
     re-fans to cluster parallelism before the text joins: AQE coalesces
     the few-MB pair exchange to one partition, which would otherwise
     serialize the whole DP stage into a single task."""
-    sets = _with_sets(df, id_col, text_col, ngram_width, "__id", "__set")
-    track(sets.persist(StorageLevel.MEMORY_AND_DISK))
-    blocks = _band_blocks(sets, "__id", "__set", band_count, band_size, seed)
-    if _PERSIST_SELF_JOIN_BLOCKS:
-        # double-referenced self-join blocks — cache so the banding
-        # kernel runs once (see lsh_self_dedup_pairs)
-        track(blocks.persist(StorageLevel.MEMORY_AND_DISK))
+    sets = _with_sets(df, id_col, text_col, ngram_width, "__id", "__set",
+                      band_count, band_size, seed)
+    # the verify re-attaches texts, never sets: cache the bands alone
+    bands = track(sets.select("__id", "__bands")
+                  .persist(StorageLevel.MEMORY_AND_DISK))
+    blocks = _band_blocks(bands, "__id")
     a = blocks.select(F.col("__id").alias("id_a"), "band_idx", "band_hash")
     b = blocks.select(F.col("__id").alias("id_b"), "band_idx", "band_hash")
     pairs = (
@@ -1020,16 +977,18 @@ def lsh_dedup_clusters(
     from .cc import min_label_components
 
     sets = _with_sets(df, id_col, text_col, ngram_width, "__id", "__set",
-                      shingle=shingle)
-    # materialize the block list once — everything downstream (ids,
-    # bucket sizes, edges, every iteration) reuses it without re-running
-    # the hashing UDFs.  The iteration itself is the shared pair-free CC
-    # core (``operators.cc.min_label_components``, factored verbatim from
-    # here in round 6 so the Hamming-block image path runs the identical
+                      band_count, band_size, seed, shingle=shingle)
+    # materialize the bands once (sets are never verified here) —
+    # everything downstream (ids, bucket sizes, edges, every iteration)
+    # re-explodes them JVM-side without re-running the hashing UDF.  The
+    # iteration itself is the shared pair-free CC core
+    # (``operators.cc.min_label_components``, factored verbatim from here
+    # in round 6 so the Hamming-block image path runs the identical
     # propagation); the measured rationale comments live with the code.
-    blocks = _band_blocks(sets, "__id", "__set", band_count, band_size, seed)
-    blocks = track(blocks.persist(StorageLevel.MEMORY_AND_DISK))
-    labels = min_label_components(blocks, max_iter=max_iter)
+    bands = track(sets.select("__id", "__bands")
+                  .persist(StorageLevel.MEMORY_AND_DISK))
+    labels = min_label_components(_band_blocks(bands, "__id"),
+                                  max_iter=max_iter)
     return labels.select(
         F.col("__id").alias(id_col),
         F.col("__label").alias("cluster_id"),
@@ -1099,14 +1058,14 @@ def build_lsh_corpus_index(
     drop_versioned_siblings(spark, f"{table_name}_bands", 0)
     drop_versioned_siblings(spark, f"{table_name}_sets", 0)
     sets = _with_sets(corpus, id_col, text_col, ngram_width,
-                      "__rid", "__rset", shingle=shingle)
+                      "__rid", "__rset", band_count, band_size, seed,
+                      shingle=shingle)
     track(sets.persist(StorageLevel.MEMORY_AND_DISK))
-    blocks = _band_blocks(sets, "__rid", "__rset", band_count, band_size, seed)
-    write_bucketed_table(blocks, f"{table_name}_bands",
+    write_bucketed_table(_band_blocks(sets, "__rid"), f"{table_name}_bands",
                          bucket_by=["band_idx", "band_hash"],
                          num_buckets=num_buckets)
-    write_bucketed_table(sets, f"{table_name}_sets", bucket_by=["__rid"],
-                         num_buckets=num_buckets)
+    write_bucketed_table(sets.select("__rid", "__rset"), f"{table_name}_sets",
+                         bucket_by=["__rid"], num_buckets=num_buckets)
     # literal-projection over range(1), NOT createDataFrame: a
     # python-local relation pays the Python-runner serialization path on
     # every write (measured 5 s per one-row write vs 0.2 s for this form)
@@ -1376,10 +1335,10 @@ def lsh_similarity_join_indexed(
     Returns (probe_id, <corpus id_col>[, jaccard])."""
     m = _meta(spark, table_name)
     l_sets = _with_sets(probe, probe_id, probe_text, m.ngram_width,
-                        "__lid", "__lset", shingle=_meta_shingle(m))
+                        "__lid", "__lset", m.band_count, m.band_size,
+                        m.seed, shingle=_meta_shingle(m))
     track(l_sets.persist(StorageLevel.MEMORY_AND_DISK))
-    l_blocks = _band_blocks(l_sets, "__lid", "__lset",
-                            m.band_count, m.band_size, m.seed)
+    l_blocks = _band_blocks(l_sets, "__lid")
     # both bucketed-table joins hint shuffle_hash: the bucketed scan
     # already delivers the corpus side partitioned on the join key (no
     # exchange), and hash-building on it skips sort-merge's sort of BOTH
@@ -1455,14 +1414,15 @@ def extend_lsh_corpus_index(
     spark = corpus_delta.sparkSession
     m = _meta(spark, table_name)
     sets = _with_sets(corpus_delta, m.id_col, m.text_col, m.ngram_width,
-                      "__rid", "__rset", shingle=_meta_shingle(m))
+                      "__rid", "__rset", m.band_count, m.band_size, m.seed,
+                      shingle=_meta_shingle(m))
     track(sets.persist(StorageLevel.MEMORY_AND_DISK))
-    blocks = _band_blocks(sets, "__rid", "__rset",
-                          m.band_count, m.band_size, m.seed)
-    write_bucketed_table(blocks, _phys(table_name, "bands", m),
+    write_bucketed_table(_band_blocks(sets, "__rid"),
+                         _phys(table_name, "bands", m),
                          bucket_by=["band_idx", "band_hash"],
                          num_buckets=m.num_buckets, mode="append")
-    write_bucketed_table(sets, _phys(table_name, "sets", m),
+    write_bucketed_table(sets.select("__rid", "__rset"),
+                         _phys(table_name, "sets", m),
                          bucket_by=["__rid"],
                          num_buckets=m.num_buckets, mode="append")
 

@@ -11,6 +11,7 @@ knob to chase.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -19,7 +20,13 @@ def get_spark(
     app_name: str = "lsh_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
+    extra_conf: "Mapping[str, str] | None" = None,
 ) -> SparkSession:
+    """The session every lsh_spark entry point runs on.
+
+    ``extra_conf`` carries deployment settings the defaults below do not
+    cover (e.g. ``spark.eventLog.*`` for a profiler); it is applied last,
+    so it also wins over a default of the same key."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
@@ -66,4 +73,6 @@ def get_spark(
     avro_pkg = os.environ.get("LSH_SPARK_AVRO_PACKAGE")
     if avro_pkg:
         builder = builder.config("spark.jars.packages", avro_pkg)
+    for key, value in (extra_conf or {}).items():
+        builder = builder.config(key, value)
     return builder.getOrCreate()

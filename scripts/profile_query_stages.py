@@ -11,9 +11,8 @@ Usage:
   python3 scripts/profile_query_stages.py QUERY [QUERY ...] \
       [--sf /root/testdata/sf0.1] [--runs 3]
 
-Methodology matches bench.py: same session confs (via plans.get_spark
-after injecting the eventLog confs into the builder environment is not
-possible, so the confs are replicated here), same sf0.001 warm pass,
+Methodology matches bench.py: same session (``plans.get_spark`` with the
+eventLog confs as ``extra_conf``), same sf0.001 warm pass,
 clearCache between runs; report per-run walls AND the per-stage table
 of the FASTEST run (noise lives between runs, not within a stage).
 """
@@ -32,30 +31,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def make_spark(event_dir: str):
-    from pyspark.sql import SparkSession
+    from lsh_spark.plans import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.appName("lsh_spark-stage-profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", event_dir)
+    return get_spark(app_name="lsh_spark-stage-profile", extra_conf={
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": event_dir,
         # Spark 4 zstd-compresses event logs by default; keep them
         # plain-JSON so the parser needs no codec
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
+        "spark.eventLog.compress": "false",
+    })
 
 
 def parse_event_log(event_dir: str):

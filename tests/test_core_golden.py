@@ -177,6 +177,69 @@ def test_empty_shingle_set_minhash():
     assert got.tolist() == scalar
 
 
+def _unblocked_minima(hashes, offs, bc, bs, seed):
+    """The per-seed minima kernel before cache blocking: one full-array
+    xor/multiply pass per seed, reduced over every non-empty segment."""
+    from lsh_spark._core.minhash import _seed_prefix_states
+
+    prefix = _seed_prefix_states(bc, bs, seed)
+    rot = (prefix << np.uint64(5)) | (prefix >> np.uint64(59))
+    out = np.full((offs.shape[0] - 1, bc * bs), np.uint64(2**64 - 1))
+    ne = offs[1:] > offs[:-1]
+    if hashes.shape[0]:
+        for s in range(bc * bs):
+            out[ne, s] = np.minimum.reduceat(
+                (hashes ^ rot[s]) * np.uint64(0x517CC1B727220A95),
+                offs[:-1][ne])
+    return out
+
+
+def _check_blocked_minima(lens, rng, bc, bs, seed, scalar=True):
+    from lsh_spark._core.batch import (
+        minhash_from_window_hashes,
+        seed_minima_from_window_hashes,
+    )
+
+    offs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    hashes = rng.integers(0, 2**32, size=int(offs[-1])).astype(np.uint64)
+    got = seed_minima_from_window_hashes(hashes, offs, bc, bs, seed)
+    assert np.array_equal(got, _unblocked_minima(hashes, offs, bc, bs, seed))
+    if scalar:
+        bands = minhash_from_window_hashes(hashes, offs, bc, bs, seed)
+        for d in range(len(lens)):
+            assert bands[d].tolist() == minhash_bands_scalar(
+                hashes[offs[d]:offs[d + 1]], bc, bs, seed)
+
+
+def test_blocked_minima_match_scalar_and_unblocked(monkeypatch):
+    """Cache-blocked per-seed minima are bit-identical to the unblocked
+    kernel and to the pure-Python bands on random segment layouts,
+    all-empty batches, a doc longer than a chunk and docs straddling
+    chunk boundaries (a 16-element chunk makes every layout cross
+    several)."""
+    from lsh_spark._core import batch
+
+    rng = np.random.default_rng(11)
+    monkeypatch.setattr(batch, "_MINIMA_CHUNK", 16)
+    for _ in range(30):
+        n = int(rng.integers(0, 12))
+        lens = rng.integers(0, 40, size=n) * (rng.random(n) < 0.8)
+        _check_blocked_minima(lens, rng, int(rng.integers(1, 5)),
+                              int(rng.integers(1, 4)),
+                              int(rng.integers(0, 2**63)))
+    _check_blocked_minima(np.zeros(5, dtype=np.int64), rng, 3, 2, 123)
+    _check_blocked_minima(np.array([], dtype=np.int64), rng, 3, 2, 123)
+    # one doc far past a chunk, between docs that straddle its edges
+    _check_blocked_minima(np.array([10, 15, 0, 200, 7, 9, 16, 17]), rng,
+                          4, 3, 99)
+    # the shipped chunk size, with one doc longer than a chunk
+    monkeypatch.undo()
+    big = batch._MINIMA_CHUNK + 1000
+    _check_blocked_minima(np.array([3000, big, 0, 5000]), rng, 2, 2, 7,
+                          scalar=False)
+
+
 def test_jaccard_range_random():
     rng = np.random.default_rng(3)
     texts = ["".join(chr(97 + int(c)) for c in rng.integers(0, 26, size=12))

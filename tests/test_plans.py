@@ -282,6 +282,68 @@ def test_indexed_probe_no_corpus_side_exchange(spark):
             spark.sql(f"DROP TABLE IF EXISTS {name}{suffix}")
 
 
+def _plan_details(plan: str, node: str) -> list[tuple[str, str]]:
+    """(Input, Arguments) lines of every ``node`` detail block of a
+    formatted plan."""
+    import re
+
+    return re.findall(
+        rf"^\(\d+\) {node}(?: \[.*\])?\nInput \[\d+\]: (.*)\nArguments: (.*)$",
+        plan, re.M)
+
+
+def test_set_and_bands_built_in_one_python_pass(spark):
+    """Each input side of the self-dedup and the indexed probe runs ONE
+    Python UDF, the fused set+band pass inside the sets cache: banding
+    is a JVM posexplode of the cached bands column, so neither a second
+    band UDF nor an ``InferFiltersFromGenerate`` twin of the fused UDF
+    appears.  AQE prints a cached plan's nodes twice (final and initial
+    plan), so evaluations are counted as distinct UDF arguments.  The
+    band-blocking exchange carries only the id and band columns."""
+    import uuid
+
+    from lsh_spark.operators.similarity_join import (
+        build_lsh_corpus_index,
+        lsh_self_dedup_pairs,
+        lsh_similarity_join_indexed,
+    )
+    from lsh_spark.sources.io import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    name = f"lsh_fused_{uuid.uuid4().hex[:8]}"
+    # surface the band-blocking shuffle join, which sf0.001 would
+    # otherwise broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        dedup = lsh_self_dedup_pairs(
+            docs, "text", id_col="doc_id", ngram_width=3, band_count=8,
+            band_size=2, seed=(123, 456), threshold=0.6)
+        build_lsh_corpus_index(
+            docs.where("doc_id >= 250"), name, text_col="text",
+            id_col="doc_id", ngram_width=3, band_count=8, band_size=2,
+            seed=123, num_buckets=8)
+        probe = lsh_similarity_join_indexed(
+            spark, name, docs.where("doc_id < 250").selectExpr(
+                "doc_id AS probe_id", "text"),
+            "text", probe_id="probe_id", threshold=0.6)
+        for df in (dedup, probe):
+            plan = _plan(df)
+            udfs = {args for _, args in _plan_details(plan, "ArrowEvalPython")}
+            assert len(udfs) == 1, plan
+            band_exchanges = [
+                cols for cols, args in _plan_details(plan, "Exchange")
+                if args.startswith("hashpartitioning(band_idx")]
+            assert band_exchanges, plan
+            for cols in band_exchanges:
+                names = {c.split("#")[0] for c in cols.strip("[]").split(", ")}
+                ids = names - {"band_idx", "band_hash"}
+                assert len(ids) == 1 and ids <= {"id_a", "id_b", "__lid"}, cols
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        for suffix in ("_bands", "_sets", "_meta"):
+            spark.sql(f"DROP TABLE IF EXISTS {name}{suffix}")
+
+
 def test_broadcast_kernel_verify_has_no_attach_joins(spark):
     """Under the broadcast cap the verification stage consumes BARE id
     pairs: exactly one join in the whole plan (the band-blocking
