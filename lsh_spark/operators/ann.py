@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 from ..functions.lsh import lsh_euclidean_bands_long
 from ..functions.vector import cosine, dot, l2_distance, norm
+from ..sources import index as ix
 
 
 def cosine_topk(
@@ -896,19 +897,11 @@ def build_ivf_pq_index(
     ``<name>_centroids`` (coarse cells), ``<name>_codebooks`` (m
     per-subspace books), and the parameter-pinning meta row.  Searches
     equal ``ivf_pq_topk`` at the build parameters by construction."""
-    from ..sources.formats import (
-        drop_table_and_files,
-        drop_versioned_siblings,
-        save_table,
-        write_bucketed_table,
-    )
-
     if dim % m:
         raise ValueError(
             f"build_ivf_pq_index: dim={dim} not divisible by m={m}")
     width = dim // m
     spark = corpus.sparkSession
-    drop_versioned_siblings(spark, f"{table_name}_codes", 0)
     # overlap the independent coarse-Lloyd and book-training job chains
     # (the ivf_pq_topk rationale; results bit-identical)
     from concurrent.futures import ThreadPoolExecutor
@@ -928,31 +921,19 @@ def build_ivf_pq_index(
         "__v_neighbor_id")
     codes = _pq_encode_pandas(assigned, books, "__v_neighbor_id") \
         .drop("__v_neighbor_id")
-    write_bucketed_table(codes, f"{table_name}_codes",
-                         bucket_by=["__cell"], num_buckets=num_buckets,
-                         sort_by=["__cell"])
+    ix.write(codes, ix.IVF_PQ, table_name, "codes", num_buckets=num_buckets)
     cent_rows = (
         cents.select(F.explode("__cents").alias("__c"))
         .select(F.col("__c.__cell").alias("__cell"),
                 F.col("__c.__cv").alias("centroid"))
     )
-    save_table(cent_rows, f"{table_name}_centroids", single_file=True)
-    cb = _codebook_rows_df(spark, books)
-    save_table(cb, f"{table_name}_codebooks", single_file=True)
-    meta = spark.range(1).select(
-        F.lit(vec_col).alias("vec_col"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(n_lists).cast("int").alias("n_lists"),
-        F.lit(cells_iters).cast("int").alias("cells_iters"),
-        F.lit(m).cast("int").alias("m"),
-        F.lit(n_codes).cast("int").alias("n_codes"),
-        F.lit(pq_iters).cast("int").alias("pq_iters"),
-        F.lit(dim).cast("int").alias("dim"),
-        F.lit(num_buckets).cast("int").alias("num_buckets"),
-        F.lit(0).cast("int").alias("version"),
-    )
-    save_table(meta, f"{table_name}_meta", single_file=True)
-    drop_table_and_files(spark, f"{table_name}_deletes")
+    ix.write(cent_rows, ix.IVF_PQ, table_name, "centroids")
+    ix.write(_codebook_rows_df(spark, books), ix.IVF_PQ, table_name,
+             "codebooks")
+    ix.finish_build(spark, ix.IVF_PQ, table_name, vec_col=vec_col,
+                    id_col=id_col, n_lists=n_lists, cells_iters=cells_iters,
+                    m=m, n_codes=n_codes, pq_iters=pq_iters, dim=dim,
+                    num_buckets=num_buckets)
 
 
 def _ivf_pq_cents(spark, table_name: str) -> DataFrame:
@@ -976,19 +957,12 @@ def search_ivf_pq_index(
     corpus-side exchange, LUTs come from the persisted codebooks, and
     tombstones anti-join — identical results to ``ivf_pq_topk`` at the
     build parameters (pytest-pinned)."""
-    from ..sources.formats import meta_version, versioned_name
-
-    mt = _pq_meta(spark, table_name)
+    mt = ix.read_meta(spark, table_name)
     probes = _assign_cells_pandas(
         _ivf_prep(queries, mt.id_col, mt.vec_col, "query_id"),
         _collect_centroids(_ivf_pq_cents(spark, table_name)),
         "__v_query_id", n_probe=n_probe).select("query_id", "__cell")
-    codes = spark.table(
-        versioned_name(f"{table_name}_codes", meta_version(mt)))
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        codes = codes.join(
-            F.broadcast(spark.table(f"{table_name}_deletes")),
-            on="neighbor_id", how="left_anti")
+    codes = ix.live_table(spark, ix.IVF_PQ, table_name, "codes", mt)
     books = _pq_books_from_table(spark, table_name)
     luts = _pq_query_luts(queries, books, vec_col=mt.vec_col,
                           id_col=mt.id_col,
@@ -1019,16 +993,11 @@ def extend_ivf_pq_index(new_vecs: DataFrame, table_name: str) -> None:
     checkpointed anti-join (the extend_text_index guard); tombstoned
     ids stay deleted."""
     from ..plans.cache import track_broadcast
-    from ..sources.formats import (
-        meta_version,
-        versioned_name,
-        write_bucketed_table,
-    )
 
     spark = new_vecs.sparkSession
-    mt = _pq_meta(spark, table_name)
-    phys = versioned_name(f"{table_name}_codes", meta_version(mt))
-    indexed = spark.table(phys).select(
+    mt = ix.read_meta(spark, table_name)
+    indexed = spark.table(
+        ix.phys(ix.IVF_PQ, table_name, "codes", mt)).select(
         F.col("neighbor_id").alias(mt.id_col))
     fresh_ids = (
         new_vecs.select(mt.id_col)
@@ -1043,53 +1012,22 @@ def extend_ivf_pq_index(new_vecs: DataFrame, table_name: str) -> None:
              for b in _pq_books_from_table(spark, table_name)]
     codes = _pq_encode_pandas(assigned, books, "__v_neighbor_id") \
         .drop("__v_neighbor_id")
-    write_bucketed_table(codes, phys, bucket_by=["__cell"],
-                         num_buckets=int(mt.num_buckets),
-                         sort_by=["__cell"], mode="append")
+    ix.write(codes, ix.IVF_PQ, table_name, "codes", mt, mode="append")
 
 
 def attach_ivf_pq_index(spark, table_name: str,
                         location_root: "str | None" = None) -> None:
     """Re-register a ``build_ivf_pq_index`` from an earlier session,
-    bucket metadata included (exchange-free probes survive attach)."""
-    import os
-
-    from ..sources.formats import (
-        _warehouse_path,
-        attach_bucketed_table,
-        attach_table,
-        meta_version,
-        versioned_name,
-    )
-
-    root = location_root or _warehouse_path(spark)
-
-    def loc(name: str) -> str:
-        return os.path.join(root, name.lower())
-
-    attach_table(spark, f"{table_name}_meta", loc(f"{table_name}_meta"))
-    mt = _pq_meta(spark, table_name)
-    phys = versioned_name(f"{table_name}_codes", meta_version(mt))
-    attach_bucketed_table(spark, phys, bucket_by=["__cell"],
-                          num_buckets=int(mt.num_buckets),
-                          location=loc(phys))
-    attach_table(spark, f"{table_name}_centroids",
-                 loc(f"{table_name}_centroids"))
-    attach_table(spark, f"{table_name}_codebooks",
-                 loc(f"{table_name}_codebooks"))
-    dels = loc(f"{table_name}_deletes")
-    if os.path.isdir(dels):
-        attach_table(spark, f"{table_name}_deletes", dels)
+    bucket metadata included (``sources/index.py::attach``)."""
+    ix.attach(spark, ix.IVF_PQ, table_name, location_root)
 
 
 # ---------------------------------------------------------------------------
 # persisted PQ index — the encode-once shape of pq_topk: codebooks are
 # trained once, the corpus persists as m ints per vector, and every
 # query batch pays only the LUT build (driver-tiny) plus one scan of
-# the codes table (m/8·dim of the raw float64 bytes).  Same lifecycle
-# contract as the LSH/IVF/text families: build/search/extend/delete/
-# attach/stats, merge-on-read tombstones, append-skip of already-
-# indexed ids, meta-row parameter pinning.
+# the codes table (m/8·dim of the raw float64 bytes).  Lifecycle: see
+# sources/index.py; extends skip already-indexed ids.
 # ---------------------------------------------------------------------------
 
 def build_pq_index(
@@ -1109,17 +1047,10 @@ def build_pq_index(
     ``<name>_meta`` row pinning every parameter.  Searches equal
     ``pq_topk`` with the same parameters by construction — same
     trainer, same encoder, same fold."""
-    from ..sources.formats import (
-        drop_table_and_files,
-        drop_versioned_siblings,
-        save_table,
-    )
-
     if dim % m:
         raise ValueError(f"build_pq_index: dim={dim} not divisible by m={m}")
     width = dim // m
     spark = corpus.sparkSession
-    drop_versioned_siblings(spark, f"{table_name}_codes", 0)
     books = _train_pq_books(corpus, vec_col=vec_col, id_col=id_col,
                             m=m, width=width, n_codes=n_codes,
                             n_iters=n_iters)
@@ -1127,26 +1058,12 @@ def build_pq_index(
         corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).cast("array<double>").alias("__v")),
         books, "__v").drop("__v")
-    save_table(codes, f"{table_name}_codes")
-    cb = _codebook_rows_df(spark, books)
-    save_table(cb, f"{table_name}_codebooks", single_file=True)
-    meta = spark.range(1).select(
-        F.lit(vec_col).alias("vec_col"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(m).cast("int").alias("m"),
-        F.lit(n_codes).cast("int").alias("n_codes"),
-        F.lit(n_iters).cast("int").alias("n_iters"),
-        F.lit(dim).cast("int").alias("dim"),
-        F.lit(0).cast("int").alias("version"),
-    )
-    save_table(meta, f"{table_name}_meta", single_file=True)
-    drop_table_and_files(spark, f"{table_name}_deletes")
-
-
-def _pq_meta(spark, table_name: str):
-    from ..sources.formats import index_meta
-
-    return index_meta(spark, f"{table_name}_meta")
+    ix.write(codes, ix.PQ, table_name, "codes")
+    ix.write(_codebook_rows_df(spark, books), ix.PQ, table_name,
+             "codebooks")
+    ix.finish_build(spark, ix.PQ, table_name, vec_col=vec_col,
+                    id_col=id_col, m=m, n_codes=n_codes, n_iters=n_iters,
+                    dim=dim)
 
 
 def _pq_books_from_table(spark, table_name: str):
@@ -1180,15 +1097,8 @@ def search_pq_index(
     persisted codebooks, one scan of the codes table, tombstones
     anti-joined — identical results to ``pq_topk`` at the build's
     parameters (pytest-pinned)."""
-    from ..sources.formats import meta_version, versioned_name
-
-    mt = _pq_meta(spark, table_name)
-    codes = spark.table(
-        versioned_name(f"{table_name}_codes", meta_version(mt)))
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        codes = codes.join(
-            F.broadcast(spark.table(f"{table_name}_deletes")),
-            on="neighbor_id", how="left_anti")
+    mt = ix.read_meta(spark, table_name)
+    codes = ix.live_table(spark, ix.PQ, table_name, "codes", mt)
     books = _pq_books_from_table(spark, table_name)
     qs = _pq_query_luts(queries, books, vec_col=mt.vec_col,
                         id_col=mt.id_col, width=int(mt.dim) // int(mt.m))
@@ -1203,12 +1113,10 @@ def extend_pq_index(new_vecs: DataFrame, table_name: str) -> None:
     localCheckpoint BEFORE the append (the self-referential-lazy-read
     guard of ``extend_text_index``); tombstoned ids stay deleted."""
     from ..plans.cache import track_broadcast
-    from ..sources.formats import meta_version, save_table, versioned_name
 
     spark = new_vecs.sparkSession
-    mt = _pq_meta(spark, table_name)
-    phys = versioned_name(f"{table_name}_codes", meta_version(mt))
-    indexed = spark.table(phys).select(
+    mt = ix.read_meta(spark, table_name)
+    indexed = spark.table(ix.phys(ix.PQ, table_name, "codes", mt)).select(
         F.col("neighbor_id").alias(mt.id_col))
     fresh_ids = (
         new_vecs.select(mt.id_col)
@@ -1221,108 +1129,32 @@ def extend_pq_index(new_vecs: DataFrame, table_name: str) -> None:
         fresh.select(F.col(mt.id_col).alias("neighbor_id"),
                      F.col(mt.vec_col).cast("array<double>").alias("__v")),
         books, "__v").drop("__v")
-    save_table(codes, phys, mode="append")
+    ix.write(codes, ix.PQ, table_name, "codes", mt, mode="append")
 
 
 def delete_from_pq_index(ids: DataFrame, table_name: str,
                          id_col: "str | None" = None) -> None:
-    """Merge-on-read tombstones (the delete_from_ivf_index contract):
-    searches anti-join ``<name>_deletes``; a full build clears
-    file-level; re-appending a tombstoned id does not resurrect it
-    (its codes row survives, so the extend anti-join skips it and the
+    """Merge-on-read tombstones (``sources/index.py::delete``) for the PQ
+    and IVF-PQ indexes: re-appending a tombstoned id does not resurrect
+    it (its codes row survives, so the extend anti-join skips it and the
     tombstone keeps winning)."""
-    from ..sources.formats import save_table
-    from .similarity_join import _adopt_orphan_tombstones
-
-    spark = ids.sparkSession
-    if id_col is None:
-        id_col = _pq_meta(spark, table_name).id_col
-    rows = ids.select(F.col(id_col).alias("neighbor_id")).distinct()
-    _adopt_orphan_tombstones(spark, table_name)
-    save_table(rows, f"{table_name}_deletes", mode="append",
-               single_file=True)
+    ix.delete(ids, ix.PQ, table_name, id_col)
 
 
 def attach_pq_index(spark, table_name: str,
                     location_root: "str | None" = None) -> None:
     """Re-register a ``build_pq_index`` written by an earlier session
-    (in-memory catalog — the attach contract shared by every index
-    family)."""
-    import os
-
-    from ..sources.formats import (
-        _warehouse_path,
-        attach_table,
-        meta_version,
-        versioned_name,
-    )
-
-    root = location_root or _warehouse_path(spark)
-
-    def loc(name: str) -> str:
-        return os.path.join(root, name.lower())
-
-    attach_table(spark, f"{table_name}_meta", loc(f"{table_name}_meta"))
-    mt = _pq_meta(spark, table_name)
-    phys = versioned_name(f"{table_name}_codes", meta_version(mt))
-    attach_table(spark, phys, loc(phys))
-    attach_table(spark, f"{table_name}_codebooks",
-                 loc(f"{table_name}_codebooks"))
-    dels = loc(f"{table_name}_deletes")
-    if os.path.isdir(dels):
-        attach_table(spark, f"{table_name}_deletes", dels)
+    (``sources/index.py::attach``)."""
+    ix.attach(spark, ix.PQ, table_name, location_root)
 
 
 def compact_pq_index(spark, table_name: str, *,
                      keep_previous: bool = False) -> None:
-    """Maintenance pass after ``extend_pq_index`` appends and
-    tombstones (the compact_ivf_index contract): rewrite the codes
-    into one compacted file-set with tombstoned vectors FOLDED OUT and
-    truncate ``_deletes`` — searches stop paying the growing anti-join
-    and per-file opens; codebooks are untouched (the quantizer never
-    retrains) so results are unchanged.  Probe-safe generation swap:
-    the compacted codes land as ``<name>_codes_v{N+1}``, published by
-    ONE appended meta row; ``keep_previous=True`` defers old-generation
-    cleanup.  Warehouse-resident indexes only."""
-    from ..sources.formats import (
-        drop_table_and_files,
-        drop_versioned_siblings,
-        generation_in_warehouse,
-        meta_version,
-        save_table,
-        versioned_name,
-    )
-
-    mt = _pq_meta(spark, table_name)
-    cur = meta_version(mt)
-    nxt = cur + 1
-    phys = versioned_name(f"{table_name}_codes", cur)
-    if not generation_in_warehouse(spark, phys):
-        raise ValueError(
-            f"refusing to compact {table_name}: {phys} is attached at "
-            "a custom location, and the compacted generation always "
-            "lands in the session warehouse — the index would end up "
-            "split across directories; copy it into the warehouse "
-            "(the attach default) or rebuild first")
-    deletes = None
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        deletes = spark.table(f"{table_name}_deletes")
-    drop_versioned_siblings(spark, f"{table_name}_codes", cur)
-    src = spark.table(phys)
-    if deletes is not None:
-        src = src.join(F.broadcast(deletes), on="neighbor_id",
-                       how="left_anti")
-    save_table(src, versioned_name(f"{table_name}_codes", nxt))
-    flipped = spark.range(1).select(
-        *[F.lit(mt[c]).alias(c) for c in spark.table(
-            f"{table_name}_meta").columns if c != "version"],
-        F.lit(nxt).cast("int").alias("version"))
-    save_table(flipped, f"{table_name}_meta", mode="append",
-               single_file=True)
-    if not keep_previous:
-        drop_table_and_files(spark, phys)
-        if deletes is not None:
-            drop_table_and_files(spark, f"{table_name}_deletes")
+    """Maintenance pass after ``extend_pq_index`` appends and tombstones
+    (``sources/index.py::compact``): the codes are rewritten with
+    tombstoned vectors folded out; codebooks are untouched (the
+    quantizer never retrains), so results are unchanged."""
+    ix.compact(spark, ix.PQ, table_name, keep_previous=keep_previous)
 
 
 def pq_index_stats(spark, table_name: str) -> DataFrame:
@@ -1330,15 +1162,8 @@ def pq_index_stats(spark, table_name: str) -> DataFrame:
     searches do): one row (n_vectors, m, n_codes, dim,
     n_distinct_codewords) — the codeword-diversity number is the
     quantization-health signal (collapsed codebooks show here first)."""
-    from ..sources.formats import meta_version, versioned_name
-
-    mt = _pq_meta(spark, table_name)
-    codes = spark.table(
-        versioned_name(f"{table_name}_codes", meta_version(mt)))
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        codes = codes.join(
-            F.broadcast(spark.table(f"{table_name}_deletes")),
-            on="neighbor_id", how="left_anti")
+    mt = ix.read_meta(spark, table_name)
+    codes = ix.live_table(spark, ix.PQ, table_name, "codes", mt)
     m = int(mt.m)
     word = F.struct(*[F.col(f"__code_{s}") for s in range(m)])
     return codes.agg(
@@ -1382,19 +1207,10 @@ def build_ivf_index(
     fly with the exact oracle-replayable arithmetic of ``sq8_topk``).
     Lloyd training and cell assignment always run on the full-precision
     vectors."""
-    from ..sources.formats import (
-        drop_versioned_siblings,
-        save_table,
-        write_bucketed_table,
-    )
-
     if storage not in ("float32", "sq8"):
         raise ValueError(f"unknown storage {storage!r}")
     if storage == "sq8" and dim is None:
         raise ValueError("storage='sq8' requires dim")
-    # a rebuild starts the generation history over at 0 (see the LSH
-    # twin): sweep any compaction generations (<name>_v{N}) first
-    drop_versioned_siblings(corpus.sparkSession, table_name, 0)
     cents = lloyd_centroids(corpus, vec_col=vec_col, id_col=id_col,
                             n_lists=n_lists, n_iters=n_iters)
     assigned = (
@@ -1412,107 +1228,34 @@ def build_ivf_index(
                     F.transform("vec", _sq8_quant).alias("codes"),
                     "__cell")
         )
-        save_table(bounds.select(F.col("__mn").alias("mn"),
-                                 F.col("__mx").alias("mx")),
-                   f"{table_name}_bounds", single_file=True)
-    write_bucketed_table(assigned, table_name, bucket_by=["__cell"],
-                         num_buckets=num_buckets, sort_by=["__cell"])
+        ix.write(bounds.select(F.col("__mn").alias("mn"),
+                               F.col("__mx").alias("mx")),
+                 ix.IVF, table_name, "bounds")
+    ix.write(assigned, ix.IVF, table_name, "", num_buckets=num_buckets)
     cent_rows = (
         cents.select(F.explode("__cents").alias("__c"))
         .select(F.col("__c.__cell").alias("__cell"),
                 F.col("__c.__cv").alias("centroid"))
     )
-    from ..sources.formats import save_table
-
-    save_table(cent_rows, f"{table_name}_centroids", single_file=True)
-    # bucket spec rides with the data for attach_ivf_index (see the LSH
-    # index's meta row for rationale)
-    meta = corpus.sparkSession.range(1).select(
-        F.lit(vec_col).alias("vec_col"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(n_lists).cast("int").alias("n_lists"),
-        F.lit(n_iters).cast("int").alias("n_iters"),
-        F.lit(num_buckets).cast("int").alias("num_buckets"),
-        # generation pointer (formats.versioned_name): compaction
-        # appends a bumped row pointing at <name>_v{N}
-        F.lit(0).cast("int").alias("version"),
-        # vector storage: "float32" (raw) | "sq8" (quantized codes +
-        # frozen <name>_bounds); readers fall back to float32 when the
-        # column is absent (pre-sq8 indexes)
-        F.lit(storage).alias("storage"),
-        # code width for sq8 (NULL for float32): rebuild checks compare
-        # it so changing the embedding dimension can never silently
-        # reuse a stale index with wrong-width bounds/codes
-        F.lit(dim).cast("int").alias("dim"),
-    )
-    save_table(meta, f"{table_name}_meta", single_file=True)
-    # a full build physically removes everything previously tombstoned
-    # (see delete_from_ivf_index); FILE-level clear so a later attach
-    # cannot resurrect stale tombstones from the surviving directory
-    from ..sources.formats import drop_table_and_files
-
-    drop_table_and_files(corpus.sparkSession, f"{table_name}_deletes")
-    if storage != "sq8":
-        # a float32 rebuild over a former sq8 index must not leave the
-        # stale bounds directory for a later attach to re-register
-        drop_table_and_files(corpus.sparkSession, f"{table_name}_bounds")
-
-
-def _ivf_meta(spark, table_name: str):
-    """Current meta row, generation pointer resolved (see
-    ``formats.index_meta``)."""
-    from ..sources.formats import index_meta
-
-    return index_meta(spark, f"{table_name}_meta")
-
-
-def _ivf_phys(table_name: str, m) -> str:
-    """Physical name of the cell-bucketed corpus table at the generation
-    the meta row points to."""
-    from ..sources.formats import meta_version, versioned_name
-
-    return versioned_name(table_name, meta_version(m))
+    ix.write(cent_rows, ix.IVF, table_name, "centroids")
+    # storage: "float32" (raw) | "sq8" (quantized codes + frozen
+    # <name>_bounds); readers fall back to float32 when the column is
+    # absent (pre-sq8 indexes).  dim is the sq8 code width (NULL for
+    # float32): rebuild checks compare it so changing the embedding
+    # dimension can never silently reuse a stale index
+    ix.finish_build(corpus.sparkSession, ix.IVF, table_name,
+                    vec_col=vec_col, id_col=id_col, n_lists=n_lists,
+                    n_iters=n_iters, num_buckets=num_buckets,
+                    storage=storage, dim=dim)
 
 
 def attach_ivf_index(spark, table_name: str,
                      location_root: str | None = None) -> None:
-    """Re-register a ``build_ivf_index`` written by an earlier session
-    (in-memory catalog loses managed tables between sessions; the files
-    survive).  Reads the bucket spec from the persisted meta row and
-    re-creates the cell-bucketed corpus + centroid tables as external
-    tables over their existing files, keeping ``search_ivf_index``'s
-    exchange-free corpus side."""
-    import os
-
-    from ..sources.formats import (
-        attach_bucketed_table,
-        attach_table,
-        _warehouse_path,
-    )
-
-    root = location_root or _warehouse_path(spark)
-
-    def loc(name: str) -> str:
-        return os.path.join(root, name.lower())
-
-    attach_table(spark, f"{table_name}_meta", loc(f"{table_name}_meta"))
-    m = _ivf_meta(spark, table_name)
-    attach_table(spark, f"{table_name}_centroids",
-                 loc(f"{table_name}_centroids"))
-    corpus_phys = _ivf_phys(table_name, m)
-    attach_bucketed_table(spark, corpus_phys, bucket_by=["__cell"],
-                          num_buckets=m.num_buckets, sort_by=["__cell"],
-                          location=loc(corpus_phys))
-    # tombstones ride along when present — without this, a later
-    # session's searches would resurrect deleted vectors and a later
-    # delete would clobber the surviving tombstone files
-    if os.path.isdir(loc(f"{table_name}_deletes")):
-        attach_table(spark, f"{table_name}_deletes",
-                     loc(f"{table_name}_deletes"))
-    # sq8 indexes carry their frozen quantization bounds
-    if os.path.isdir(loc(f"{table_name}_bounds")):
-        attach_table(spark, f"{table_name}_bounds",
-                     loc(f"{table_name}_bounds"))
+    """Re-register a ``build_ivf_index`` written by an earlier session:
+    the cell-bucketed corpus (bucket spec from the meta row), centroids,
+    sq8 bounds and tombstones (``sources/index.py::attach``), keeping
+    ``search_ivf_index``'s exchange-free corpus side."""
+    ix.attach(spark, ix.IVF, table_name, location_root)
 
 
 def extend_ivf_index(
@@ -1537,10 +1280,8 @@ def extend_ivf_index(
 
     Caller contract: delta ids must be NEW — id dedup against the index
     is a full corpus scan, the cost this operator exists to avoid."""
-    from ..sources.formats import write_bucketed_table
-
     spark = corpus_delta.sparkSession
-    m = _ivf_meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     cents = spark.table(f"{table_name}_centroids").agg(
         F.sort_array(F.collect_list(
             F.struct("__cell", F.col("centroid").alias("__cv"))))
@@ -1565,99 +1306,25 @@ def extend_ivf_index(
                     F.transform("vec", _sq8_quant).alias("codes"),
                     "__cell")
         )
-    write_bucketed_table(assigned, _ivf_phys(table_name, m),
-                         bucket_by=["__cell"],
-                         num_buckets=m.num_buckets, sort_by=["__cell"],
-                         mode="append")
+    ix.write(assigned, ix.IVF, table_name, "", m, mode="append")
 
 
 def compact_ivf_index(spark, table_name: str, *,
                       keep_previous: bool = False) -> None:
     """Maintenance pass after many ``extend_ivf_index`` appends and
-    ``delete_from_ivf_index`` tombstones: rewrite the cell-bucketed
-    corpus into one file-set per bucket with tombstoned vectors FOLDED
-    OUT, then truncate ``_deletes`` — long-lived indexes stop paying a
-    growing anti-join per search and deleted vectors are physically
-    reclaimed without retraining the quantizer.  Search results are
-    unchanged; the bucket spec and centroids survive.
-
-    Probe-safe generation swap, same scheme as ``compact_lsh_index``:
-    the compacted corpus lands as ``<name>_v{N+1}`` and is published by
-    appending one bumped meta row; ``keep_previous=True`` defers old-
-    generation cleanup for in-flight readers.  Warehouse-resident
-    indexes only (managed or attach-default) — an index attached at a
-    custom ``location_root`` is refused, see ``compact_lsh_index``."""
-    from ..sources.formats import (
-        drop_table_and_files,
-        drop_versioned_siblings,
-        generation_in_warehouse,
-        meta_version,
-        save_table,
-        versioned_name,
-        write_bucketed_table,
-    )
-
-    m = _ivf_meta(spark, table_name)
-    cur = meta_version(m)
-    nxt = cur + 1
-    phys = versioned_name(table_name, cur)
-    if not generation_in_warehouse(spark, phys):
-        raise ValueError(
-            f"refusing to compact {table_name}: {phys} is attached at "
-            "a custom location, and the compacted generation always "
-            "lands in the session warehouse — the index would end up "
-            "split across directories; copy it into the warehouse "
-            "(the attach default) or rebuild first")
-    deletes = None
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        deletes = spark.table(f"{table_name}_deletes")
-    drop_versioned_siblings(spark, table_name, cur)
-    src = spark.table(versioned_name(table_name, cur))
-    if deletes is not None:
-        src = src.join(F.broadcast(deletes), on="neighbor_id",
-                       how="left_anti")
-    write_bucketed_table(src, versioned_name(table_name, nxt),
-                         bucket_by=["__cell"], num_buckets=m.num_buckets,
-                         sort_by=["__cell"])
-    if "version" not in spark.table(f"{table_name}_meta").columns:
-        migrated = spark.table(f"{table_name}_meta").withColumn(
-            "version", F.lit(cur).cast("int"))
-        save_table(migrated.localCheckpoint(eager=True),
-                   f"{table_name}_meta", single_file=True)
-    flipped = spark.range(1).select(
-        *[F.lit(m[c]).alias(c) for c in spark.table(
-            f"{table_name}_meta").columns if c != "version"],
-        F.lit(nxt).cast("int").alias("version"))
-    save_table(flipped, f"{table_name}_meta", mode="append",
-               single_file=True)
-    if not keep_previous:
-        drop_table_and_files(spark, versioned_name(table_name, cur))
-        if deletes is not None:
-            drop_table_and_files(spark, f"{table_name}_deletes")
+    ``delete_from_ivf_index`` tombstones (``sources/index.py::compact``):
+    the cell-bucketed corpus is rewritten with tombstoned vectors folded
+    out, without retraining the quantizer.  Search results are
+    unchanged; the bucket spec and centroids survive."""
+    ix.compact(spark, ix.IVF, table_name, keep_previous=keep_previous)
 
 
 def delete_from_ivf_index(ids: DataFrame, table_name: str,
                           id_col: "str | None" = None) -> None:
-    """Tombstone deletion for a persisted IVF index — same merge-on-read
-    contract as ``delete_from_lsh_index``: ids append to a tiny
-    ``<name>_deletes`` table that searches anti-join (broadcast);
-    physical removal (and tombstone clearing) happens at the next
-    ``compact_ivf_index`` or full ``build_ivf_index``.  A tombstoned id
-    stays deleted even if re-appended via ``extend_ivf_index`` —
-    rebuild to resurrect."""
-    from ..sources.formats import save_table
-    from .similarity_join import _adopt_orphan_tombstones
-
-    spark = ids.sparkSession
-    if id_col is None:
-        id_col = _ivf_meta(spark, table_name).id_col
-    rows = ids.select(F.col(id_col).alias("neighbor_id")).distinct()
-    # append-mode save_table covers create and merge; surviving
-    # cross-session tombstones are adopted first so the stale-orphan
-    # clear can never silently destroy them (ADVICE r5)
-    _adopt_orphan_tombstones(spark, table_name)
-    save_table(rows, f"{table_name}_deletes", mode="append",
-               single_file=True)
+    """Tombstone deletion for a persisted IVF index
+    (``sources/index.py::delete``): searches anti-join the deleted ids
+    until the next ``compact_ivf_index`` or full ``build_ivf_index``."""
+    ix.delete(ids, ix.IVF, table_name, id_col)
 
 
 def ivf_index_stats(spark, table_name: str) -> DataFrame:
@@ -1668,12 +1335,8 @@ def ivf_index_stats(spark, table_name: str) -> DataFrame:
     more vectors); min/max member ids pin content, not just volume."""
     from pyspark.sql import functions as F
 
-    m = _ivf_meta(spark, table_name)
-    postings = spark.table(_ivf_phys(table_name, m))
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        postings = postings.join(
-            F.broadcast(spark.table(f"{table_name}_deletes")),
-            on="neighbor_id", how="left_anti")
+    postings = ix.live_table(spark, ix.IVF, table_name, "",
+                             ix.read_meta(spark, table_name))
     return (
         postings.groupBy("__cell")
         .agg(
@@ -1709,14 +1372,10 @@ def search_ivf_index(
     probes = _assign_cells_pandas(
         _ivf_prep(queries, id_col, vec_col, "query_id"),
         _collect_centroids(cents), "__v_query_id", n_probe=n_probe)
-    m = _ivf_meta(spark, table_name)
-    corpus_tbl = spark.table(_ivf_phys(table_name, m))
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        # broadcast anti-join keeps the bucketed corpus side's
-        # partitioning, so the __cell join stays exchange-free
-        corpus_tbl = corpus_tbl.join(
-            F.broadcast(spark.table(f"{table_name}_deletes")),
-            on="neighbor_id", how="left_anti")
+    m = ix.read_meta(spark, table_name)
+    # the broadcast anti-join keeps the bucketed corpus side's
+    # partitioning, so the __cell join stays exchange-free
+    corpus_tbl = ix.live_table(spark, ix.IVF, table_name, "", m)
     storage = (m.storage if "storage" in m.__fields__ else "float32")
     joined = (
         probes.join(corpus_tbl, on="__cell")

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import index as ix
+
 _K = 4  # md5 yields four disjoint 8-hex windows — k is fixed by design
 
 
@@ -218,8 +220,7 @@ FROM probe p JOIN exact e ON e.doc_id = p.doc_id
 
 # ---------------------------------------------------------------------------
 # persisted Bloom index — the crawler's standing membership filter.
-# Lifecycle follows the repo's index contract (meta-pinned parameters,
-# append-only stats deltas, cross-session attach).  Deletes are
+# Lifecycle: see sources/index.py (append-only stats deltas).  Deletes are
 # structurally unsupported: a Bloom filter is an over-approximation and
 # clearing a bit would false-negative other members — shrink only via
 # rebuild.  Extend is the bit_or MERGE (associative), so
@@ -238,19 +239,12 @@ def build_bloom_index(
     (append-only insert-count deltas readers SUM) and ``<name>_meta``
     (m_bits/k pinned — probes MUST hash with the meta row's m_bits,
     never a caller parameter)."""
-    from ..sources.formats import save_table
-
-    spark = corpus.sparkSession
     words = bloom_build_words(corpus, text_col, m_bits=m_bits)
-    save_table(words, f"{table_name}_words")
+    ix.write(words, ix.BLOOM, table_name, "words")
     stats = corpus.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    save_table(stats, f"{table_name}_stats", single_file=True)
-    meta = spark.range(1).select(
-        F.lit(int(m_bits)).cast("long").alias("m_bits"),
-        F.lit(int(_K)).cast("int").alias("k"),
-        F.lit(text_col).alias("text_col"),
-        F.lit(0).cast("int").alias("version"))
-    save_table(meta, f"{table_name}_meta", single_file=True)
+    ix.write(stats, ix.BLOOM, table_name, "stats")
+    ix.finish_build(corpus.sparkSession, ix.BLOOM, table_name,
+                    m_bits=int(m_bits), k=int(_K), text_col=text_col)
 
 
 def _meta_text_col(meta_row, text_col: str | None) -> str:
@@ -281,10 +275,8 @@ def extend_bloom_index(
     ``text_col`` may only RESTATE the meta-pinned column (hashing a
     different column would mix hash spaces inside one filter — the
     probes-use-meta-params contract); a differing value raises."""
-    from ..sources.formats import index_meta, save_table
-
     spark = new_docs.sparkSession
-    m = index_meta(spark, f"{table_name}_meta")
+    m = ix.read_meta(spark, table_name)
     tc = _meta_text_col(m, text_col)
     delta = bloom_build_words(new_docs, tc, m_bits=int(m.m_bits))
     # pin the merged frame before the overwrite reads its own input
@@ -294,10 +286,9 @@ def extend_bloom_index(
         .agg(F.expr("bit_or(bits)").alias("bits"))
         .localCheckpoint(eager=True)
     )
-    save_table(merged, f"{table_name}_words")
+    ix.write(merged, ix.BLOOM, table_name, "words")
     stats = new_docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    save_table(stats, f"{table_name}_stats", mode="append",
-               single_file=True)
+    ix.write(stats, ix.BLOOM, table_name, "stats", mode="append")
 
 
 def probe_bloom_index(
@@ -313,9 +304,7 @@ def probe_bloom_index(
     contract — ``text_col`` may only restate the pinned column, a
     differing value raises); the words table broadcasts, so the probe
     ships only the batch's own k rows per document."""
-    from ..sources.formats import index_meta
-
-    m = index_meta(spark, f"{table_name}_meta")
+    m = ix.read_meta(spark, table_name)
     tc = _meta_text_col(m, text_col)
     return bloom_probe(new_docs, spark.table(f"{table_name}_words"),
                        tc, id_col=id_col, m_bits=int(m.m_bits))
@@ -325,17 +314,10 @@ def attach_bloom_index(spark, table_name: str,
                        location_root: str | None = None) -> None:
     """Re-register a Bloom index written by an earlier session (the
     in-memory catalog forgets managed tables while their files
-    survive): meta/words/stats come back as external tables over their
-    existing warehouse directories.  No bucket spec — the words table
+    survive): meta/words/stats come back as external tables
+    (``sources/index.py::attach``).  No bucket spec — the words table
     is broadcast-read, never join-bucketed."""
-    import os
-
-    from ..sources.formats import _warehouse_path, attach_table
-
-    root = location_root or _warehouse_path(spark)
-    for suffix in ("meta", "words", "stats"):
-        name = f"{table_name}_{suffix}"
-        attach_table(spark, name, os.path.join(root, name.lower()))
+    ix.attach(spark, ix.BLOOM, table_name, location_root)
 
 
 def bloom_index_stats(spark, table_name: str) -> DataFrame:
@@ -346,9 +328,7 @@ def bloom_index_stats(spark, table_name: str) -> DataFrame:
     division of two exact integers, 6dp-rounded — the hll_vocab
     contract.  No ln-based cardinality estimate in the gate: ln is not
     bit-stable cross-engine."""
-    from ..sources.formats import index_meta
-
-    m = index_meta(spark, f"{table_name}_meta")
+    m = ix.read_meta(spark, table_name)
     words = spark.table(f"{table_name}_words")
     stats = spark.table(f"{table_name}_stats")
     n_docs = stats.agg(F.sum("n_docs").cast("long").alias("__nd"))

@@ -28,6 +28,7 @@ from pyspark.sql.types import LongType
 
 from ..functions.vector import cosine
 from ..plans.cache import track
+from ..sources import index as ix
 from .._core.batch import hash_strings_batch
 
 
@@ -827,71 +828,25 @@ def build_cdc_chunk_index(
     pinning the chunking parameters (window/base/divisor are
     index-defining the way banding parameters are for the LSH index —
     probes read them from the meta so a probe can never chunk with
-    different boundaries than the index).  Follows the repo index
-    lifecycle contract: rebuilds sweep compaction generations and clear
-    ``<name>_deletes`` FILE-level; deletes are merge-on-read doc-id
-    tombstones every probe anti-joins."""
-    from ..sources.formats import (drop_table_and_files,
-                                   drop_versioned_siblings, save_table,
-                                   write_bucketed_table)
-
-    spark = corpus.sparkSession
-    drop_versioned_siblings(spark, f"{table_name}_chunks", 0)
+    different boundaries than the index).  Lifecycle: see
+    ``sources/index.py``."""
     chunks = (
         _cdc_chunks(corpus, id_col=id_col, text_col=text_col,
                     window=window, base=base, divisor=divisor)
         .select(F.col("doc_id").alias("__rid"), "__ch")
         .distinct()
     )
-    write_bucketed_table(chunks, f"{table_name}_chunks",
-                         bucket_by=["__ch"], num_buckets=num_buckets)
-    meta = spark.range(1).select(
-        F.lit(id_col).alias("id_col"),
-        F.lit(text_col).alias("text_col"),
-        F.lit(int(window)).cast("int").alias("window"),
-        F.lit(int(base)).cast("bigint").alias("base"),
-        F.lit(int(divisor)).cast("int").alias("divisor"),
-        F.lit(int(num_buckets)).cast("int").alias("num_buckets"),
-        F.lit(0).cast("int").alias("version"),
-    )
-    save_table(meta, f"{table_name}_meta", single_file=True)
-    drop_table_and_files(spark, f"{table_name}_deletes")
-
-
-def _cdc_index_meta(spark, table_name: str):
-    from ..sources.formats import index_meta
-
-    return index_meta(spark, f"{table_name}_meta")
+    ix.write(chunks, ix.CDC, table_name, "chunks", num_buckets=num_buckets)
+    ix.finish_build(corpus.sparkSession, ix.CDC, table_name, id_col=id_col,
+                    text_col=text_col, window=int(window), base=int(base),
+                    divisor=int(divisor), num_buckets=int(num_buckets))
 
 
 def delete_from_cdc_index(ids: DataFrame, table_name: str,
                           id_col: "str | None" = None) -> None:
-    """Merge-on-read doc tombstones for the chunk index (same contract
-    as ``delete_from_lsh_index``: O(delta) append, probes anti-join,
-    physical removal at the next full build)."""
-    from ..sources.formats import save_table
-    from .similarity_join import _adopt_orphan_tombstones
-
-    spark = ids.sparkSession
-    if id_col is None:
-        id_col = _cdc_index_meta(spark, table_name).id_col
-    rows = ids.select(F.col(id_col).alias("__rid")).distinct()
-    _adopt_orphan_tombstones(spark, table_name)
-    save_table(rows, f"{table_name}_deletes", mode="append",
-               single_file=True)
-
-
-def _live_index_chunks(spark, table_name: str) -> DataFrame:
-    from ..sources.formats import meta_version, versioned_name
-
-    m = _cdc_index_meta(spark, table_name)
-    chunks = spark.table(versioned_name(f"{table_name}_chunks",
-                                        meta_version(m)))
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        dels = spark.table(f"{table_name}_deletes").select("__rid")
-        chunks = chunks.join(F.broadcast(dels), on="__rid",
-                             how="left_anti")
-    return chunks
+    """Merge-on-read doc tombstones for the chunk index
+    (``sources/index.py::delete``)."""
+    ix.delete(ids, ix.CDC, table_name, id_col)
 
 
 def chunk_novelty_against_index(
@@ -911,14 +866,14 @@ def chunk_novelty_against_index(
     anti-joined out first (merge-on-read).  Chunking parameters come
     from the index meta row — never from caller arguments — so probe
     boundaries can't drift from the index."""
-    m = _cdc_index_meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     probe = (
         _cdc_chunks(new_docs, id_col=id_col, text_col=text_col,
                     window=int(m.window), base=int(m.base),
                     divisor=int(m.divisor))
         .distinct()
     )
-    live = _live_index_chunks(spark, table_name)
+    live = ix.live_table(spark, ix.CDC, table_name, "chunks", m)
     totals = probe.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_unique_chunks"))
     known = (
@@ -947,7 +902,8 @@ def cdc_index_stats_df(spark, table_name: str) -> DataFrame:
     same numbers from the RAW corpus, so this query pins persisted
     index content against an independent derivation (the index-stats
     contract)."""
-    live = _live_index_chunks(spark, table_name)
+    live = ix.live_table(spark, ix.CDC, table_name, "chunks",
+                         ix.read_meta(spark, table_name))
     per_digest = live.groupBy("__ch").agg(
         F.count(F.lit(1)).alias("__nd"))
     return per_digest.agg(
@@ -960,35 +916,10 @@ def cdc_index_stats_df(spark, table_name: str) -> DataFrame:
 def attach_cdc_chunk_index(spark, table_name: str,
                            location_root: "str | None" = None) -> None:
     """Re-register a chunk index's tables in a fresh session from files
-    surviving on disk — bucket spec from the meta row (the cross-session
-    contract shared by every persisted index family); re-attaches
-    ``_deletes`` when its directory survives so tombstones keep masking.
-    ``location_root`` overrides the warehouse directory (an index copied
-    or mounted elsewhere)."""
-    import os
-
-    from ..sources.formats import (_warehouse_path, attach_bucketed_table,
-                                   attach_table, meta_version,
-                                   versioned_name)
-
-    def loc(name: str) -> "str | None":
-        if location_root is None:
-            return None
-        return os.path.join(location_root, name.lower())
-
-    attach_table(spark, f"{table_name}_meta",
-                 location=loc(f"{table_name}_meta"))
-    m = _cdc_index_meta(spark, table_name)
-    phys = versioned_name(f"{table_name}_chunks", meta_version(m))
-    attach_bucketed_table(spark, phys, bucket_by=["__ch"],
-                          num_buckets=int(m.num_buckets),
-                          location=loc(phys))
-    dels_dir = (loc(f"{table_name}_deletes")
-                or os.path.join(_warehouse_path(spark),
-                                f"{table_name}_deletes".lower()))
-    if (not spark.catalog.tableExists(f"{table_name}_deletes")
-            and os.path.isdir(dels_dir)):
-        attach_table(spark, f"{table_name}_deletes", location=dels_dir)
+    surviving on disk, bucket spec and tombstones included
+    (``sources/index.py::attach``).  ``location_root`` overrides the
+    warehouse directory (an index copied or mounted elsewhere)."""
+    ix.attach(spark, ix.CDC, table_name, location_root)
 
 
 def extend_cdc_chunk_index(corpus_delta: DataFrame,
@@ -1006,11 +937,8 @@ def extend_cdc_chunk_index(corpus_delta: DataFrame,
     inflates ``cdc_index_stats`` row counts (novelty probes key on
     distinct digests and are unaffected), but dedup the delta upstream
     if ids can repeat."""
-    from ..sources.formats import meta_version, versioned_name, \
-        write_bucketed_table
-
     spark = corpus_delta.sparkSession
-    m = _cdc_index_meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     chunks = (
         _cdc_chunks(corpus_delta, id_col=m.id_col, text_col=m.text_col,
                     window=int(m.window), base=int(m.base),
@@ -1018,62 +946,12 @@ def extend_cdc_chunk_index(corpus_delta: DataFrame,
         .select(F.col("doc_id").alias("__rid"), "__ch")
         .distinct()
     )
-    write_bucketed_table(
-        chunks, versioned_name(f"{table_name}_chunks", meta_version(m)),
-        bucket_by=["__ch"], num_buckets=int(m.num_buckets),
-        mode="append")
+    ix.write(chunks, ix.CDC, table_name, "chunks", m, mode="append")
 
 
 def compact_cdc_chunk_index(spark, table_name: str, *,
                             keep_previous: bool = False) -> None:
     """Maintenance pass after extends/deletes: rewrite ``_chunks`` into
-    one file-set per bucket with tombstoned docs FOLDED OUT, publish by
-    appending a bumped-``version`` meta row (the append IS the
-    generation swap — a racing probe sees either generation, each fully
-    on disk), then truncate ``_deletes``.  Same guarantees and refusals
-    as ``compact_lsh_index`` (new generations land in the session
-    warehouse; custom-location indexes are refused;
-    ``keep_previous=True`` defers old-generation cleanup for in-flight
-    readers)."""
-    from ..sources.formats import (
-        drop_table_and_files,
-        drop_versioned_siblings,
-        generation_in_warehouse,
-        index_meta,
-        meta_version,
-        save_table,
-        versioned_name,
-        write_bucketed_table,
-    )
-
-    m = index_meta(spark, f"{table_name}_meta")
-    cur = meta_version(m)
-    nxt = cur + 1
-    phys = versioned_name(f"{table_name}_chunks", cur)
-    if not generation_in_warehouse(spark, phys):
-        raise ValueError(
-            f"refusing to compact {table_name}: {phys} is attached at a "
-            "custom location, and the compacted generation always lands "
-            "in the session warehouse — the index would end up split "
-            "across directories; copy it into the warehouse (the attach "
-            "default) or rebuild first")
-    deletes = None
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        deletes = spark.table(f"{table_name}_deletes")
-    drop_versioned_siblings(spark, f"{table_name}_chunks", cur)
-    src = spark.table(phys)
-    if deletes is not None:
-        src = src.join(F.broadcast(deletes), on="__rid", how="left_anti")
-    write_bucketed_table(src, versioned_name(f"{table_name}_chunks", nxt),
-                         bucket_by=["__ch"],
-                         num_buckets=int(m.num_buckets))
-    flipped = spark.range(1).select(
-        *[F.lit(m[c]).alias(c) for c in spark.table(
-            f"{table_name}_meta").columns if c != "version"],
-        F.lit(nxt).cast("int").alias("version"))
-    save_table(flipped, f"{table_name}_meta", mode="append",
-               single_file=True)
-    if not keep_previous:
-        drop_table_and_files(spark, phys)
-        if deletes is not None:
-            drop_table_and_files(spark, f"{table_name}_deletes")
+    one file-set per bucket with tombstoned docs folded out and truncate
+    ``_deletes`` (``sources/index.py::compact``)."""
+    ix.compact(spark, ix.CDC, table_name, keep_previous=keep_previous)

@@ -5252,36 +5252,20 @@ _CCLBL_PARAMS = dict(ngram_width=3, band_count=6, band_size=6, seed=123)
 
 def ensure_cluster_labels(spark: SparkSession, sf_dir: str) -> str:
     import os
-    import sys
-    import time
 
-    from ..sources.formats import index_meta, save_table
+    from ..sources import index as ix
 
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    name = f"cclbl_{tag}"
+    name = f"cclbl_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}"
     want = {k: int(v) for k, v in _CCLBL_PARAMS.items()}
-    have = None
-    if spark.catalog.tableExists(f"{name}_meta"):
-        m = index_meta(spark, f"{name}_meta")
-        have = dict(ngram_width=int(m.ngram_width),
-                    band_count=int(m.band_count),
-                    band_size=int(m.band_size), seed=int(m.seed))
-    if have != want:
-        t0 = time.perf_counter()
-        docs = load_table(spark, sf_dir, "documents")
+
+    def build() -> None:
         labels = lsh_dedup_clusters(
-            docs, "text", id_col="doc_id",
-            ngram_width=want["ngram_width"],
-            band_count=want["band_count"],
-            band_size=want["band_size"], seed=want["seed"])
-        save_table(labels, name, single_file=True)
-        meta = spark.range(1).select(
-            *[F.lit(v).cast("int").alias(k) for k, v in want.items()])
-        save_table(meta, f"{name}_meta", single_file=True)
-        print(f"# ensure_cluster_labels: CC build took "
-              f"{time.perf_counter() - t0:.2f}s (reused by the other "
-              f"cluster gates this session)", file=sys.stderr)
-    return name
+            load_table(spark, sf_dir, "documents"), "text", id_col="doc_id",
+            **want)
+        ix.write(labels, ix.CLUSTER_LABELS, name, "")
+        ix.finish_build(spark, ix.CLUSTER_LABELS, name, **want)
+
+    return ix.ensure(spark, ix.CLUSTER_LABELS, name, want, build)
 
 
 # ---------------------------------------------------------------------------
@@ -5461,31 +5445,25 @@ QUERIES_LATE["more_like_this_docs"] = (more_like_this_docs, _mlt_oracle())
 
 def ensure_bloom_index(spark: SparkSession, sf_dir: str) -> str:
     """Session-amortized build of the gate's Bloom index over the
-    even-id corpus; m_bits pinned in the meta row — a parameter change
-    forces a rebuild, same-session reruns reuse the filter (the
-    ensure_ab_index contract)."""
+    even-id corpus (``sources/index.py::ensure``); m_bits pinned in the
+    meta row — a parameter change or a partial index forces a rebuild,
+    same-session reruns reuse the filter."""
     import os
 
+    from ..sources import index as ix
     from .bloom import build_bloom_index
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     name = f"bloomidx_{tag}"
-    want = dict(m_bits=int(_BLOOM_M_BITS), text_col="text")
-    have = None
-    # a meta row alone does not prove a usable index: a partial one
-    # (meta present, _words/_stats missing) must rebuild, not fail
-    # downstream (round-11 advice)
-    if all(spark.catalog.tableExists(f"{name}_{sfx}")
-           for sfx in ("meta", "words", "stats")):
-        from ..sources.formats import index_meta
 
-        m = index_meta(spark, f"{name}_meta")
-        have = dict(m_bits=int(m.m_bits), text_col=m.text_col)
-    if have != want:
+    def build() -> None:
         docs = load_table(spark, sf_dir, "documents")
         build_bloom_index(docs.where(F.col("doc_id") % 2 == 0), name,
                           m_bits=_BLOOM_M_BITS)
-    return name
+
+    return ix.ensure(spark, ix.BLOOM, name,
+                     dict(m_bits=int(_BLOOM_M_BITS), text_col="text"),
+                     build)
 
 
 def bloom_index_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

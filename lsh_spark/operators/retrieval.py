@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.cache import track
+from ..sources import index as ix
 from .training_ops import _words
 
 
@@ -318,16 +319,14 @@ def phrase_search_indexed(
     replaces the per-batch corpus tokenize/posexplode, tombstones
     anti-join, and only postings matching the phrase vocabulary ever
     leave the scan (the broadcast term join prunes first)."""
-    m = _meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     if not _is_positional(m):
         raise ValueError(
             f"text index {table_name!r} was built without "
             "positional=True — phrase probes need the positions table; "
             "rebuild with build_text_index(..., positional=True)")
     ph, plen = _phrase_frames(queries, query_id_col, phrase_col)
-    pos_post = _live_side(
-        spark, table_name,
-        spark.table(_phys(table_name, "positions", m)))
+    pos_post = ix.live_table(spark, ix.TEXT, table_name, "positions", m)
     return _phrase_match(pos_post, ph, plen)
 
 
@@ -477,15 +476,13 @@ def proximity_search_indexed(
     persisted (doc_id, __term, __pos) table replaces the per-batch
     tokenize/posexplode, tombstones anti-join, and the broadcast term
     join prunes postings at the scan."""
-    m = _meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     if not _is_positional(m):
         raise ValueError(
             f"text index {table_name!r} was built without "
             "positional=True — proximity probes need the positions "
             "table; rebuild with build_text_index(..., positional=True)")
-    pos_post = _live_side(
-        spark, table_name,
-        spark.table(_phys(table_name, "positions", m)))
+    pos_post = ix.live_table(spark, ix.TEXT, table_name, "positions", m)
     return _proximity_match(pos_post, queries, window,
                             query_id_col, term_a_col, term_b_col)
 
@@ -677,7 +674,7 @@ def proximity_rank_indexed(
     the positions table feeds the pair stage, tombstones anti-join on
     both sides, and the broadcast query-term join prunes each at the
     scan."""
-    m = _meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     if not _is_positional(m):
         raise ValueError(
             f"text index {table_name!r} was built without "
@@ -685,16 +682,14 @@ def proximity_rank_indexed(
             "positions table; rebuild with "
             "build_text_index(..., positional=True)")
     qt = _query_terms(queries, query_id_col, query_text_col)
-    post = _live_side(
-        spark, table_name,
-        spark.table(_phys(table_name, "postings", m))
-        .join(F.broadcast(qt.select("__term").distinct()), "__term"))
-    dl = _live_side(spark, table_name,
-                    spark.table(_phys(table_name, "doclen", m)))
+    post = ix.live(
+        spark, ix.TEXT, table_name,
+        spark.table(ix.phys(ix.TEXT, table_name, "postings", m))
+        .join(F.broadcast(qt.select("__term").distinct()), "__term"),
+        "doc_id")
+    dl = ix.live_table(spark, ix.TEXT, table_name, "doclen", m)
     stats = _live_stats(spark, table_name, m)
-    pos_post = _live_side(
-        spark, table_name,
-        spark.table(_phys(table_name, "positions", m)))
+    pos_post = ix.live_table(spark, ix.TEXT, table_name, "positions", m)
     return _proximity_rank_tail(pos_post, post, qt, dl, stats,
                                 window=window, k=k, k1=k1, b=b,
                                 prox_weight=prox_weight)
@@ -814,18 +809,6 @@ SELECT query_id, doc_id, score, rank FROM ranked WHERE rank <= {int(k)}
 # applied to lexical retrieval)
 # ---------------------------------------------------------------------------
 
-def _meta(spark, table_name: str):
-    from ..sources.formats import index_meta
-
-    return index_meta(spark, f"{table_name}_meta")
-
-
-def _phys(table_name: str, suffix: str, m) -> str:
-    from ..sources.formats import meta_version, versioned_name
-
-    return versioned_name(f"{table_name}_{suffix}", meta_version(m))
-
-
 def _is_positional(m) -> bool:
     """Meta rows written before positional support read as False."""
     return "positional" in m.__fields__ and bool(m.positional)
@@ -863,16 +846,6 @@ def build_text_index(
     anti-join ``<name>_deletes`` on doc_id and correct N/total/df
     in-plan, so BM25 statistics exclude deleted documents exactly; a
     full rebuild clears them FILE-level."""
-    from ..sources.formats import (
-        drop_table_and_files,
-        drop_versioned_siblings,
-        save_table,
-        write_bucketed_table,
-    )
-
-    spark = corpus.sparkSession
-    for suffix in ("postings", "doclen", "stats", "positions"):
-        drop_versioned_siblings(spark, f"{table_name}_{suffix}", 0)
     toks = (
         corpus.select(F.col(id_col).alias("doc_id"),
                       F.explode(_words(F.col(text_col))).alias("__term"))
@@ -882,33 +855,25 @@ def build_text_index(
     dl = corpus.select(
         F.col(id_col).alias("doc_id"),
         F.size(_words(F.col(text_col))).cast("long").alias("__dl"))
-    write_bucketed_table(toks, f"{table_name}_postings",
-                         bucket_by=["__term"], num_buckets=num_buckets,
-                         sort_by=["__term"])
-    write_bucketed_table(dl, f"{table_name}_doclen",
-                         bucket_by=["doc_id"], num_buckets=num_buckets)
+    ix.write(toks, ix.TEXT, table_name, "postings", num_buckets=num_buckets)
+    ix.write(dl, ix.TEXT, table_name, "doclen", num_buckets=num_buckets)
     if positional:
         positions = corpus.select(
             F.col(id_col).alias("doc_id"),
             F.posexplode(_words(F.col(text_col)))
             .alias("__pos", "__term"))
-        write_bucketed_table(positions, f"{table_name}_positions",
-                             bucket_by=["__term"],
-                             num_buckets=num_buckets,
-                             sort_by=["__term"])
-    save_table(
-        dl.agg(F.count(F.lit(1)).alias("__n_docs"),
-               F.coalesce(F.sum("__dl"), F.lit(0)).alias("__total")),
-        f"{table_name}_stats", single_file=True)
-    meta = spark.range(1).select(
-        F.lit(text_col).alias("text_col"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(num_buckets).cast("int").alias("num_buckets"),
-        F.lit(bool(positional)).alias("positional"),
-        F.lit(0).cast("int").alias("version"),
-    )
-    save_table(meta, f"{table_name}_meta", single_file=True)
-    drop_table_and_files(spark, f"{table_name}_deletes")
+        ix.write(positions, ix.TEXT, table_name, "positions",
+                 num_buckets=num_buckets)
+    ix.write(_stats_row(dl), ix.TEXT, table_name, "stats")
+    ix.finish_build(corpus.sparkSession, ix.TEXT, table_name,
+                    text_col=text_col, id_col=id_col,
+                    num_buckets=num_buckets, positional=bool(positional))
+
+
+def _stats_row(dl: DataFrame) -> DataFrame:
+    """The 1-row (N, total tokens) aggregate of a doclen frame."""
+    return dl.agg(F.count(F.lit(1)).alias("__n_docs"),
+                  F.coalesce(F.sum("__dl"), F.lit(0)).alias("__total"))
 
 
 def extend_text_index(new_docs: DataFrame, table_name: str) -> None:
@@ -926,10 +891,9 @@ def extend_text_index(new_docs: DataFrame, table_name: str) -> None:
     (the drift a 100 TB index discovers months later); the winning copy
     is the FIRST indexed one."""
     spark = new_docs.sparkSession
-    m = _meta(spark, table_name)
-    from ..sources.formats import save_table, write_bucketed_table
-
-    indexed_ids = spark.table(_phys(table_name, "doclen", m)).select(
+    m = ix.read_meta(spark, table_name)
+    indexed_ids = spark.table(
+        ix.phys(ix.TEXT, table_name, "doclen", m)).select(
         F.col("doc_id").alias(m.id_col))
     # the anti-join MUST be pinned (eager localCheckpoint of the tiny
     # batch-scale id set) before any append: the doclen write below
@@ -950,54 +914,25 @@ def extend_text_index(new_docs: DataFrame, table_name: str) -> None:
     dl = new_docs.select(
         F.col(m.id_col).alias("doc_id"),
         F.size(_words(F.col(m.text_col))).cast("long").alias("__dl"))
-    write_bucketed_table(toks, _phys(table_name, "postings", m),
-                         bucket_by=["__term"],
-                         num_buckets=int(m.num_buckets),
-                         sort_by=["__term"], mode="append")
-    write_bucketed_table(dl, _phys(table_name, "doclen", m),
-                         bucket_by=["doc_id"],
-                         num_buckets=int(m.num_buckets), mode="append")
+    ix.write(toks, ix.TEXT, table_name, "postings", m, mode="append")
+    ix.write(dl, ix.TEXT, table_name, "doclen", m, mode="append")
     if _is_positional(m):
         positions = new_docs.select(
             F.col(m.id_col).alias("doc_id"),
             F.posexplode(_words(F.col(m.text_col)))
             .alias("__pos", "__term"))
-        write_bucketed_table(positions, _phys(table_name, "positions", m),
-                             bucket_by=["__term"],
-                             num_buckets=int(m.num_buckets),
-                             sort_by=["__term"], mode="append")
-    save_table(
-        dl.agg(F.count(F.lit(1)).alias("__n_docs"),
-               F.coalesce(F.sum("__dl"), F.lit(0)).alias("__total")),
-        _phys(table_name, "stats", m), mode="append", single_file=True)
+        ix.write(positions, ix.TEXT, table_name, "positions", m,
+                 mode="append")
+    ix.write(_stats_row(dl), ix.TEXT, table_name, "stats", m, mode="append")
 
 
 def delete_from_text_index(ids: DataFrame, table_name: str,
                            id_col: "str | None" = None) -> None:
-    """Tombstone deletion (merge-on-read — the LSH-index contract):
-    deleted ids append to ``<name>_deletes``; probes anti-join them AND
+    """Tombstone deletion (the merge-on-read contract of
+    ``sources/index.py::delete``): probes anti-join the deleted ids AND
     correct the corpus statistics in-plan, so a delete is O(delta) and
     scores match a from-scratch index over the surviving docs."""
-    from ..operators.similarity_join import _adopt_orphan_tombstones
-    from ..sources.formats import save_table
-
-    spark = ids.sparkSession
-    if id_col is None:
-        id_col = _meta(spark, table_name).id_col
-    rows = ids.select(F.col(id_col).alias("__rid")).distinct()
-    _adopt_orphan_tombstones(spark, table_name)
-    save_table(rows, f"{table_name}_deletes", mode="append",
-               single_file=True)
-
-
-def _live_side(spark, table_name: str, df: DataFrame) -> DataFrame:
-    """Anti-join a postings/doclen frame against the tombstone table
-    (broadcast — deletion sets are small next to the corpus)."""
-    if not spark.catalog.tableExists(f"{table_name}_deletes"):
-        return df
-    dels = spark.table(f"{table_name}_deletes").select(
-        F.col("__rid").alias("doc_id"))
-    return df.join(F.broadcast(dels), "doc_id", "left_anti")
+    ix.delete(ids, ix.TEXT, table_name, id_col)
 
 
 def _live_stats(spark, table_name: str, m) -> DataFrame:
@@ -1005,15 +940,14 @@ def _live_stats(spark, table_name: str, m) -> DataFrame:
     stats deltas (``_stats`` is append-only — extend appends increments)
     minus a broadcast-joined (deletes ⨝ doclen) aggregate — all sides
     tiny, no corpus scan."""
-    stats = spark.table(_phys(table_name, "stats", m)).agg(
+    stats = spark.table(ix.phys(ix.TEXT, table_name, "stats", m)).agg(
         F.sum("__n_docs").alias("__n_docs"),
         F.sum("__total").alias("__total"))
-    if not spark.catalog.tableExists(f"{table_name}_deletes"):
+    dels = ix.tombstones(spark, ix.TEXT, table_name, "doc_id")
+    if dels is None:
         return stats
-    dels = spark.table(f"{table_name}_deletes").select(
-        F.col("__rid").alias("doc_id"))
     gone = (
-        spark.table(_phys(table_name, "doclen", m))
+        spark.table(ix.phys(ix.TEXT, table_name, "doclen", m))
         .join(F.broadcast(dels), "doc_id")
         .agg(F.count(F.lit(1)).alias("__gn"),
              F.coalesce(F.sum("__dl"), F.lit(0)).alias("__gt"))
@@ -1041,14 +975,14 @@ def bm25_search_indexed(
     semantics (and oracle) to ``bm25_topk`` — the bucketed postings make
     the query-vocabulary join and the df aggregate exchange-free on the
     corpus side, and only the matched subset ever shuffles."""
-    m = _meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     qt = _query_terms(queries, query_id_col, query_text_col)
-    post = _live_side(
-        spark, table_name,
-        spark.table(_phys(table_name, "postings", m))
-        .join(F.broadcast(qt.select("__term").distinct()), "__term"))
-    dl = _live_side(spark, table_name,
-                    spark.table(_phys(table_name, "doclen", m)))
+    post = ix.live(
+        spark, ix.TEXT, table_name,
+        spark.table(ix.phys(ix.TEXT, table_name, "postings", m))
+        .join(F.broadcast(qt.select("__term").distinct()), "__term"),
+        "doc_id")
+    dl = ix.live_table(spark, ix.TEXT, table_name, "doclen", m)
     stats = _live_stats(spark, table_name, m)
     return _bm25_score(post, qt, dl, stats, k=k, k1=k1, b=b,
                        exclude_self=exclude_self)
@@ -1058,9 +992,8 @@ def text_index_stats(spark, table_name: str) -> DataFrame:
     """Corpus-level statistics of the LIVE index content (tombstones
     excluded — the lsh_index_stats contract): one row
     (n_docs, total_tokens, n_terms, n_postings)."""
-    m = _meta(spark, table_name)
-    post = _live_side(spark, table_name,
-                      spark.table(_phys(table_name, "postings", m)))
+    m = ix.read_meta(spark, table_name)
+    post = ix.live_table(spark, ix.TEXT, table_name, "postings", m)
     agg = post.agg(
         F.countDistinct("__term").cast("long").alias("n_terms"),
         F.count(F.lit(1)).cast("long").alias("n_postings"))
@@ -1076,73 +1009,26 @@ def text_index_stats(spark, table_name: str) -> DataFrame:
 def attach_text_index(spark, table_name: str,
                       location_root: "str | None" = None) -> None:
     """Re-register a ``build_text_index`` written by an earlier session
-    (in-memory catalog — the LSH-index attach contract): reads the
-    bucket spec from the persisted meta row and re-creates the tables
-    as external tables over their surviving files, bucket metadata
-    included."""
-    import os
-
-    from ..sources.formats import (
-        _warehouse_path,
-        attach_bucketed_table,
-        attach_table,
-    )
-
-    root = location_root or _warehouse_path(spark)
-
-    def loc(name: str) -> str:
-        return os.path.join(root, name.lower())
-
-    attach_table(spark, f"{table_name}_meta", loc(f"{table_name}_meta"))
-    m = _meta(spark, table_name)
-    attach_bucketed_table(spark, _phys(table_name, "postings", m),
-                          bucket_by=["__term"],
-                          num_buckets=int(m.num_buckets),
-                          location=loc(_phys(table_name, "postings", m)))
-    attach_bucketed_table(spark, _phys(table_name, "doclen", m),
-                          bucket_by=["doc_id"],
-                          num_buckets=int(m.num_buckets),
-                          location=loc(_phys(table_name, "doclen", m)))
-    attach_table(spark, _phys(table_name, "stats", m),
-                 loc(_phys(table_name, "stats", m)))
-    if _is_positional(m):
-        attach_bucketed_table(
-            spark, _phys(table_name, "positions", m),
-            bucket_by=["__term"], num_buckets=int(m.num_buckets),
-            location=loc(_phys(table_name, "positions", m)))
-    dels = loc(f"{table_name}_deletes")
-    if os.path.isdir(dels):
-        attach_table(spark, f"{table_name}_deletes", dels)
+    with its bucket spec (``sources/index.py::attach``)."""
+    ix.attach(spark, ix.TEXT, table_name, location_root)
 
 
 def ensure_text_index(spark, sf_dir: str) -> str:
     """Session-amortized build of the gate's BM25 index over documents
-    (the ``ensure_ab_index`` pattern): fresh sessions always build; a
-    parameter change forces a rebuild via the meta row; same-session
-    reruns time the probe only."""
+    (``sources/index.py::ensure``): fresh sessions always build; a
+    parameter change or a partial index forces a rebuild via the meta
+    row; same-session reruns time the probe only."""
     import os
-    import sys
-    import time
 
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     index = f"textidx_{tag}"
-    want = dict(text_col="text", id_col="doc_id", positional=True)
-    have = None
-    if spark.catalog.tableExists(f"{index}_meta"):
-        m = _meta(spark, index)
-        have = dict(text_col=m.text_col, id_col=m.id_col,
-                    positional=_is_positional(m))
-    if have != want:
-        t0 = time.perf_counter()
-        build_text_index(load_table(spark, sf_dir, "documents"), index,
-                         positional=True)
-        print(f"# ensure_text_index: index build took "
-              f"{time.perf_counter() - t0:.2f}s (reused by later runs "
-              f"in this session)", file=sys.stderr)
-    return index
+    return ix.ensure(
+        spark, ix.TEXT, index,
+        dict(text_col="text", id_col="doc_id", positional=True),
+        lambda: build_text_index(load_table(spark, sf_dir, "documents"),
+                                 index, positional=True))
 
 
 def text_index_stats_oracle_sql(source: str = "documents") -> str:
@@ -1175,81 +1061,18 @@ FROM toks
 def compact_text_index(spark, table_name: str, *,
                        keep_previous: bool = False) -> None:
     """Maintenance pass after ``extend_text_index`` appends and
-    tombstones (the ``compact_lsh_index`` contract): rewrite postings
-    and doclen into one file-set per bucket with tombstoned docs FOLDED
-    OUT, collapse the append-only ``_stats`` deltas into one exact row
-    recomputed from the compacted doclen, and truncate ``_deletes`` —
-    probes stop paying the growing anti-join + per-file open costs and
-    results are unchanged.  The generation swap is probe-safe: new
-    physical tables ``<name>_*_v{N+1}`` published by ONE appended meta
-    row; ``keep_previous=True`` leaves the old generation (and the
-    folded deletes its readers still need) for in-flight plans.
-    Indexes attached at a custom location_root are refused (the new
-    generation lands in the session warehouse)."""
-    from ..sources.formats import (
-        drop_table_and_files,
-        drop_versioned_siblings,
-        generation_in_warehouse,
-        meta_version,
-        save_table,
-        versioned_name,
-        write_bucketed_table,
-    )
+    tombstones (``sources/index.py::compact``): postings, doclen and
+    positions are rewritten with tombstoned docs folded out, and the
+    append-only ``_stats`` deltas collapse into one exact row
+    recomputed from the compacted doclen.  Results are unchanged."""
+    from ..sources.formats import save_table
 
-    m = _meta(spark, table_name)
-    cur = meta_version(m)
-    nxt = cur + 1
-    suffixes = ("postings", "doclen", "stats") + (
-        ("positions",) if _is_positional(m) else ())
-    for suffix in suffixes:
-        phys = versioned_name(f"{table_name}_{suffix}", cur)
-        if not generation_in_warehouse(spark, phys):
-            raise ValueError(
-                f"refusing to compact {table_name}: {phys} is attached "
-                "at a custom location, and the compacted generation "
-                "always lands in the session warehouse — the index "
-                "would end up split across directories; copy it into "
-                "the warehouse (the attach default) or rebuild first")
-    deletes = None
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        deletes = spark.table(f"{table_name}_deletes").select(
-            F.col("__rid").alias("doc_id"))
-    folds = [("postings", ["__term"]), ("doclen", ["doc_id"])]
-    if _is_positional(m):
-        folds.append(("positions", ["__term"]))
-    for suffix, bucket_by in folds:
-        base = f"{table_name}_{suffix}"
-        drop_versioned_siblings(spark, base, cur)
-        src = spark.table(versioned_name(base, cur))
-        if deletes is not None:
-            src = src.join(F.broadcast(deletes), on="doc_id",
-                           how="left_anti")
-        write_bucketed_table(src, versioned_name(base, nxt),
-                             bucket_by=bucket_by,
-                             num_buckets=int(m.num_buckets))
-    drop_versioned_siblings(spark, f"{table_name}_stats", cur)
-    save_table(
-        spark.table(versioned_name(f"{table_name}_doclen", nxt))
-        .agg(F.count(F.lit(1)).alias("__n_docs"),
-             F.coalesce(F.sum("__dl"), F.lit(0)).alias("__total")),
-        versioned_name(f"{table_name}_stats", nxt), single_file=True)
-    if "version" not in spark.table(f"{table_name}_meta").columns:
-        migrated = spark.table(f"{table_name}_meta").withColumn(
-            "version", F.lit(cur).cast("int"))
-        save_table(migrated.localCheckpoint(eager=True),
-                   f"{table_name}_meta", single_file=True)
-    flipped = spark.range(1).select(
-        *[F.lit(m[c]).alias(c) for c in spark.table(
-            f"{table_name}_meta").columns if c != "version"],
-        F.lit(nxt).cast("int").alias("version"))
-    save_table(flipped, f"{table_name}_meta", mode="append",
-               single_file=True)
-    if not keep_previous:
-        for suffix in suffixes:
-            drop_table_and_files(
-                spark, versioned_name(f"{table_name}_{suffix}", cur))
-        if deletes is not None:
-            drop_table_and_files(spark, f"{table_name}_deletes")
+    def recompute_stats(new: dict) -> None:
+        save_table(_stats_row(spark.table(new["doclen"])), new["stats"],
+                   single_file=True)
+
+    ix.compact(spark, ix.TEXT, table_name, keep_previous=keep_previous,
+               rebuild=recompute_stats)
 
 
 # ---------------------------------------------------------------------------
@@ -1533,7 +1356,7 @@ def boolean_search_indexed(
     one count-distinct-terms aggregate against the broadcast
     must-count, and the exclusion is an anti-join on (query, doc) —
     tombstoned docs excluded like every index probe."""
-    m = _meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     qt = queries.select(F.col(query_id_col).alias("query_id"),
                         _words(F.col(must_col)).alias("__m"),
                         _words(F.col(not_col)).alias("__x"))
@@ -1541,10 +1364,11 @@ def boolean_search_indexed(
     nmust = must.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("__n_must"))
     banned = qt.select("query_id", F.explode("__x").alias("__term")).distinct()
-    post = _live_side(
-        spark, table_name,
-        spark.table(_phys(table_name, "postings", m))
-        .select("doc_id", "__term"))
+    post = ix.live(
+        spark, ix.TEXT, table_name,
+        spark.table(ix.phys(ix.TEXT, table_name, "postings", m))
+        .select("doc_id", "__term"),
+        "doc_id")
     hits = (
         post.join(F.broadcast(must), "__term")
         .groupBy("query_id", "doc_id")

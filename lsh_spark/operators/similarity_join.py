@@ -38,6 +38,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.lsh import shingle_set_bands_col
 from ..plans.cache import track
+from ..sources import index as ix
 
 # Exact-Jaccard verification (the reference's set ratio,
 # ``shingleset.rs:50-57``: 0.0 when either side is empty) runs as ONE
@@ -1002,12 +1003,8 @@ def lsh_index_stats(spark, table_name: str) -> DataFrame:
     (band_idx, n_buckets, n_rows, max_bucket, n_singletons).  Bucket
     skew is the probe-cost signal; a ballooning max bucket says retune
     banding or compact."""
-    m = _meta(spark, table_name)
-    bands = spark.table(_phys(table_name, "bands", m))
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        bands = bands.join(
-            F.broadcast(spark.table(f"{table_name}_deletes")),
-            on="__rid", how="left_anti")
+    bands = ix.live_table(spark, ix.LSH, table_name, "bands",
+                          ix.read_meta(spark, table_name))
     buckets = bands.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).alias("__sz"))
     return (
@@ -1049,104 +1046,36 @@ def build_lsh_corpus_index(
     ``_bands`` and the set re-attach reads matching buckets of ``_sets``
     with no corpus-side exchange.  (``seed`` is a single int here — build
     one index per rotation for the seed-rotation recall pattern.)"""
-    from ..sources.formats import drop_versioned_siblings, write_bucketed_table
-
-    spark = corpus.sparkSession
-    # a rebuild starts the generation history over at 0: sweep any
-    # compaction generations (<name>_bands_v{N}) the old pointer left
-    # behind, or the base-name overwrite below would strand them
-    drop_versioned_siblings(spark, f"{table_name}_bands", 0)
-    drop_versioned_siblings(spark, f"{table_name}_sets", 0)
     sets = _with_sets(corpus, id_col, text_col, ngram_width,
                       "__rid", "__rset", band_count, band_size, seed,
                       shingle=shingle)
     track(sets.persist(StorageLevel.MEMORY_AND_DISK))
-    write_bucketed_table(_band_blocks(sets, "__rid"), f"{table_name}_bands",
-                         bucket_by=["band_idx", "band_hash"],
-                         num_buckets=num_buckets)
-    write_bucketed_table(sets.select("__rid", "__rset"), f"{table_name}_sets",
-                         bucket_by=["__rid"], num_buckets=num_buckets)
-    # literal-projection over range(1), NOT createDataFrame: a
-    # python-local relation pays the Python-runner serialization path on
-    # every write (measured 5 s per one-row write vs 0.2 s for this form)
-    meta = corpus.sparkSession.range(1).select(
-        F.lit(text_col).alias("text_col"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(ngram_width).cast("int").alias("ngram_width"),
-        F.lit(band_count).cast("int").alias("band_count"),
-        F.lit(band_size).cast("int").alias("band_size"),
-        F.lit(seed).cast("int").alias("seed"),
-        # the shingle mode is an index-defining parameter like the
-        # banding: probes/extends read it from here so a weighted index
-        # can never silently be probed with char shingles
-        F.lit(shingle).alias("shingle"),
-        # the bucket spec rides with the data so attach_lsh_corpus_index
-        # can re-register the tables in a later session without guessing
-        F.lit(num_buckets).cast("int").alias("num_buckets"),
-        # generation pointer (sources/formats.py::versioned_name): a
-        # fresh build is generation 0 at the bare table names; each
-        # compaction appends a meta row pointing at <name>_*_v{N}
-        F.lit(0).cast("int").alias("version"),
-    )
-    from ..sources.formats import save_table
-
-    save_table(meta, f"{table_name}_meta", single_file=True)
-    # a full build physically removes everything previously tombstoned —
-    # the merge-on-read contract (see delete_from_lsh_index).  The clear
-    # must be FILE-level: a catalog-only DROP leaves the on-disk deletes
-    # directory for a later attach to resurrect as stale tombstones.
-    from ..sources.formats import drop_table_and_files
-
-    drop_table_and_files(corpus.sparkSession, f"{table_name}_deletes")
+    ix.write(_band_blocks(sets, "__rid"), ix.LSH, table_name, "bands",
+             num_buckets=num_buckets)
+    ix.write(sets.select("__rid", "__rset"), ix.LSH, table_name, "sets",
+             num_buckets=num_buckets)
+    # the shingle mode is an index-defining parameter like the banding:
+    # probes/extends read it from the meta row so a weighted index can
+    # never silently be probed with char shingles; the bucket spec rides
+    # along so attach_lsh_corpus_index can re-register the tables later
+    ix.finish_build(corpus.sparkSession, ix.LSH, table_name,
+                    text_col=text_col, id_col=id_col,
+                    ngram_width=ngram_width, band_count=band_count,
+                    band_size=band_size, seed=seed, shingle=shingle,
+                    num_buckets=num_buckets)
 
 
 def delete_from_lsh_index(ids: DataFrame, table_name: str,
                           id_col: "str | None" = None) -> None:
-    """Tombstone deletion for a persisted LSH index — the merge-on-read
-    shape: deleted corpus ids append to a tiny ``<name>_deletes`` table
-    and every probe anti-joins it (broadcast — deletion sets are small
-    next to the corpus), so a delete is O(delta) instead of rewriting
-    the bucketed index.  Physical removal happens at the next full
-    ``build_lsh_corpus_index``, which clears the tombstones.
-
-    Note: a tombstoned id stays deleted even if later re-appended via
-    ``extend_lsh_corpus_index`` — rebuild to resurrect an id.
+    """Tombstone deletion for a persisted LSH index (the merge-on-read
+    contract of ``sources/index.py::delete``): deleted corpus ids append
+    to ``<name>_deletes`` and every probe anti-joins them.  Physical
+    removal happens at the next ``compact_lsh_index`` or full
+    ``build_lsh_corpus_index``; a tombstoned id stays deleted even if
+    re-appended via ``extend_lsh_corpus_index``.
 
     ``id_col`` defaults to the indexed corpus id column (meta row)."""
-    from ..sources.formats import save_table
-
-    spark = ids.sparkSession
-    if id_col is None:
-        id_col = _meta(spark, table_name).id_col
-    rows = ids.select(F.col(id_col).alias("__rid")).distinct()
-    # save_table(mode="append") covers both branches: it creates the
-    # table when absent and appends when the catalog knows it.  Fail
-    # CLOSED on the in-between: tombstones surviving on disk from an
-    # earlier session with no catalog entry would be rmtree'd by the
-    # stale-orphan clear — silently resurrecting earlier deletions —
-    # so auto-attach them first and the append merges instead
-    _adopt_orphan_tombstones(spark, table_name)
-    save_table(rows, f"{table_name}_deletes", mode="append",
-               single_file=True)
-
-
-def _adopt_orphan_tombstones(spark, table_name: str) -> None:
-    """Register a ``<name>_deletes`` directory that survives in the
-    warehouse from an earlier session but has no catalog entry, so an
-    append MERGES with the surviving tombstones instead of the
-    stale-orphan clear deleting them (silent loss of earlier deletions
-    — ADVICE r5).  ``attach_*`` does this too; this covers callers who
-    delete without attaching first."""
-    import os
-
-    from ..sources.formats import _warehouse_path, attach_table
-
-    name = f"{table_name}_deletes"
-    if spark.catalog.tableExists(name):
-        return
-    loc = os.path.join(_warehouse_path(spark), name.lower())
-    if os.path.isdir(loc):
-        attach_table(spark, name, loc)
+    ix.delete(ids, ix.LSH, table_name, id_col)
 
 
 def _meta_shingle(m) -> str:
@@ -1156,162 +1085,30 @@ def _meta_shingle(m) -> str:
     return m.shingle if "shingle" in m.__fields__ else "char"
 
 
-def _meta(spark, table_name: str):
-    """Current meta row (generation pointer resolved — see
-    ``formats.index_meta``)."""
-    from ..sources.formats import index_meta
-
-    return index_meta(spark, f"{table_name}_meta")
-
-
-def _phys(table_name: str, suffix: str, m) -> str:
-    """Physical table name of logical ``<table_name>_<suffix>`` at the
-    generation the meta row points to."""
-    from ..sources.formats import meta_version, versioned_name
-
-    return versioned_name(f"{table_name}_{suffix}", meta_version(m))
-
-
-def _without_deleted(spark, table_name: str, pairs: DataFrame,
-                     rid: str = "__rid") -> DataFrame:
-    """Drop candidate pairs whose corpus id is tombstoned (no-op when
-    the index has no deletes table)."""
-    if not spark.catalog.tableExists(f"{table_name}_deletes"):
-        return pairs
-    return pairs.join(
-        F.broadcast(spark.table(f"{table_name}_deletes")
-                    .withColumnRenamed("__rid", rid)),
-        on=rid, how="left_anti")
-
-
 def compact_lsh_index(spark, table_name: str, *,
                       keep_previous: bool = False) -> None:
     """Maintenance pass after many ``extend_lsh_corpus_index`` appends
     and ``delete_from_lsh_index`` tombstones: rewrite ``_bands``/
-    ``_sets`` into one file-set per bucket (each append added one — a
-    daily-extended index grows a file per bucket per day and probes pay
-    the per-file open cost) with every tombstoned id FOLDED OUT, then
-    truncate ``_deletes`` — so a long-lived index's probes stop paying
-    a monotonically growing anti-join and deleted payloads are
-    physically reclaimed without a full rebuild.  Probe results are
-    unchanged; the bucket spec survives.
-
-    The generation swap is probe-safe: the compacted tables are written
-    as NEW physical tables (``<name>_bands_v{N+1}`` — never touching
-    the generation probes are reading) and published by appending one
-    meta row with the bumped ``version`` pointer; a probe resolving the
-    index mid-compaction sees either generation, each fully on disk.
-    With ``keep_previous=True`` the old generation's files (and the
-    folded ``_deletes`` rows, which its readers still need) are LEFT on
-    disk for in-flight plans that already resolved them — the next
-    compaction sweeps them; the default reclaims them immediately
-    (drop-in for single-writer maintenance).
-
-    Works on warehouse-resident indexes whether built this session
-    (managed) or re-registered by ``attach_lsh_corpus_index`` (external
-    at the warehouse default); an index attached at a CUSTOM
-    ``location_root`` is refused — the compacted generation always
-    lands in the session warehouse, which would split the index across
-    directories."""
-    from ..sources.formats import (
-        drop_table_and_files,
-        drop_versioned_siblings,
-        generation_in_warehouse,
-        index_meta,
-        meta_version,
-        save_table,
-        versioned_name,
-        write_bucketed_table,
-    )
-
-    m = index_meta(spark, f"{table_name}_meta")
-    cur = meta_version(m)
-    nxt = cur + 1
-    for suffix in ("bands", "sets"):
-        phys = versioned_name(f"{table_name}_{suffix}", cur)
-        if not generation_in_warehouse(spark, phys):
-            raise ValueError(
-                f"refusing to compact {table_name}: {phys} is attached "
-                "at a custom location, and the compacted generation "
-                "always lands in the session warehouse — the index "
-                "would end up split across directories; copy it into "
-                "the warehouse (the attach default) or rebuild first")
-    deletes = None
-    if spark.catalog.tableExists(f"{table_name}_deletes"):
-        deletes = spark.table(f"{table_name}_deletes")
-    for suffix, bucket_by in (("bands", ["band_idx", "band_hash"]),
-                              ("sets", ["__rid"])):
-        base = f"{table_name}_{suffix}"
-        # sweep crashed-compaction debris: a half-written target or an
-        # un-dropped previous generation both differ from the pointer
-        drop_versioned_siblings(spark, base, cur)
-        src = spark.table(versioned_name(base, cur))
-        if deletes is not None:
-            src = src.join(F.broadcast(deletes), on="__rid", how="left_anti")
-        write_bucketed_table(src, versioned_name(base, nxt),
-                             bucket_by=bucket_by,
-                             num_buckets=m.num_buckets)
-    if "version" not in spark.table(f"{table_name}_meta").columns:
-        # pre-versioning index: one-time meta migration (add the pointer
-        # column at generation cur) before the append-only flip below
-        migrated = spark.table(f"{table_name}_meta").withColumn(
-            "version", F.lit(cur).cast("int"))
-        save_table(migrated.localCheckpoint(eager=True),
-                   f"{table_name}_meta", single_file=True)
-    flipped = spark.range(1).select(
-        *[F.lit(m[c]).alias(c) for c in spark.table(
-            f"{table_name}_meta").columns if c != "version"],
-        F.lit(nxt).cast("int").alias("version"))
-    save_table(flipped, f"{table_name}_meta", mode="append",
-               single_file=True)
-    if not keep_previous:
-        for suffix in ("bands", "sets"):
-            drop_table_and_files(
-                spark, versioned_name(f"{table_name}_{suffix}", cur))
-        if deletes is not None:
-            # folded into generation nxt — stale for its readers; kept
-            # under keep_previous because generation cur still needs it
-            drop_table_and_files(spark, f"{table_name}_deletes")
+    ``_sets`` into one file-set per bucket with every tombstoned id
+    folded out, then truncate ``_deletes``.  Probe results are
+    unchanged.  The probe-safe generation swap, ``keep_previous`` and
+    the refusal of custom-location indexes are the shared contract of
+    ``sources/index.py::compact``."""
+    ix.compact(spark, ix.LSH, table_name, keep_previous=keep_previous)
 
 
 def attach_lsh_corpus_index(spark, table_name: str,
                             location_root: str | None = None) -> None:
     """Re-register a ``build_lsh_corpus_index`` written by an EARLIER
-    session: the default catalog is in-memory, so the bucketed tables'
-    files survive in the warehouse but the new session cannot see them —
-    exactly the amortization the index exists for.  Reads the bucket spec
-    from the persisted meta row and re-creates all three tables as
-    external tables over their existing files (bucket metadata included,
-    so probes keep their exchange-free corpus side).
+    session (the in-memory catalog forgets managed tables while their
+    files survive): ``_meta``, ``_bands``/``_sets`` with their bucket
+    spec, and ``_deletes`` when present — see
+    ``sources/index.py::attach``.
 
     ``location_root``: directory containing the ``<table_name>_bands`` /
     ``_sets`` / ``_meta`` directories (defaults to the session warehouse).
     No-op for tables the catalog already knows."""
-    import os
-
-    from ..sources.formats import (
-        attach_bucketed_table,
-        attach_table,
-        _warehouse_path,
-    )
-
-    root = location_root or _warehouse_path(spark)
-
-    def loc(name: str) -> str:
-        return os.path.join(root, name.lower())
-
-    attach_table(spark, f"{table_name}_meta", loc(f"{table_name}_meta"))
-    m = _meta(spark, table_name)
-    bands, sets_ = _phys(table_name, "bands", m), _phys(table_name, "sets", m)
-    attach_bucketed_table(spark, bands,
-                          bucket_by=["band_idx", "band_hash"],
-                          num_buckets=m.num_buckets, location=loc(bands))
-    attach_bucketed_table(spark, sets_, bucket_by=["__rid"],
-                          num_buckets=m.num_buckets, location=loc(sets_))
-    # tombstones ride along when present (see delete_from_lsh_index)
-    if os.path.isdir(loc(f"{table_name}_deletes")):
-        attach_table(spark, f"{table_name}_deletes",
-                     loc(f"{table_name}_deletes"))
+    ix.attach(spark, ix.LSH, table_name, location_root)
 
 
 def lsh_similarity_join_indexed(
@@ -1333,7 +1130,7 @@ def lsh_similarity_join_indexed(
     with matching parameters.
 
     Returns (probe_id, <corpus id_col>[, jaccard])."""
-    m = _meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     l_sets = _with_sets(probe, probe_id, probe_text, m.ngram_width,
                         "__lid", "__lset", m.band_count, m.band_size,
                         m.seed, shingle=_meta_shingle(m))
@@ -1347,13 +1144,14 @@ def lsh_similarity_join_indexed(
     # (measured at sf0.1: 1.17M candidate pairs for a 2.5k-row set table)
     pairs = (
         l_blocks.join(
-            spark.table(_phys(table_name, "bands", m)).hint("shuffle_hash"),
+            spark.table(ix.phys(ix.LSH, table_name, "bands", m))
+            .hint("shuffle_hash"),
             on=["band_idx", "band_hash"], how="inner")
         .select("__lid", "__rid")
         .dropDuplicates(["__lid", "__rid"])
     )
-    pairs = _without_deleted(spark, table_name, pairs)
-    sets_tbl = spark.table(_phys(table_name, "sets", m))
+    pairs = ix.live(spark, ix.LSH, table_name, pairs)
+    sets_tbl = spark.table(ix.phys(ix.LSH, table_name, "sets", m))
     # verify under the broadcast cap exactly like the non-indexed joins
     # (the bare-id-pairs contract): ship probe + corpus sets ONCE to the
     # workers and verify (id_a, id_b) rows in the kernel — the attach
@@ -1409,22 +1207,16 @@ def extend_lsh_corpus_index(
     dedup against the index is a full ``_sets`` scan, exactly the cost
     this operator exists to avoid; dedup the delta upstream (e.g. with
     ``lsh_dedup_keep_first``) if ids can repeat."""
-    from ..sources.formats import write_bucketed_table
-
     spark = corpus_delta.sparkSession
-    m = _meta(spark, table_name)
+    m = ix.read_meta(spark, table_name)
     sets = _with_sets(corpus_delta, m.id_col, m.text_col, m.ngram_width,
                       "__rid", "__rset", m.band_count, m.band_size, m.seed,
                       shingle=_meta_shingle(m))
     track(sets.persist(StorageLevel.MEMORY_AND_DISK))
-    write_bucketed_table(_band_blocks(sets, "__rid"),
-                         _phys(table_name, "bands", m),
-                         bucket_by=["band_idx", "band_hash"],
-                         num_buckets=m.num_buckets, mode="append")
-    write_bucketed_table(sets.select("__rid", "__rset"),
-                         _phys(table_name, "sets", m),
-                         bucket_by=["__rid"],
-                         num_buckets=m.num_buckets, mode="append")
+    ix.write(_band_blocks(sets, "__rid"), ix.LSH, table_name, "bands", m,
+             mode="append")
+    ix.write(sets.select("__rid", "__rset"), ix.LSH, table_name, "sets", m,
+             mode="append")
 
 
 def dedup_new_against_index(

@@ -299,87 +299,6 @@ def drop_table_and_files(spark: SparkSession, table_name: str) -> None:
         shutil.rmtree(loc, ignore_errors=True)
 
 
-def versioned_name(base: str, version) -> str:
-    """Physical table name for logical table ``base`` at generation
-    pointer ``version``: generation 0 (a fresh ``build_*``) uses the
-    bare base name, compaction generations N >= 1 use ``<base>_v{N}``.
-    The pointer itself rides in the index's ``_meta`` table (latest
-    row wins — see :func:`index_meta`), so swapping generations is one
-    appended meta row instead of a rename window."""
-    v = 0 if version is None else int(version)
-    return base if v == 0 else f"{base}_v{v}"
-
-
-def index_meta(spark: SparkSession, meta_table: str):
-    """The CURRENT meta row of a persisted index: ``_meta`` is
-    append-only — compaction appends a row with a bumped ``version``
-    pointer rather than overwriting, so the single-row append IS the
-    generation swap (readers resolve max(version); a reader racing the
-    append sees either the old or the new row, each pointing at a
-    fully-written generation).  Pre-versioning meta tables (no
-    ``version`` column) read as generation 0."""
-    from pyspark.sql import functions as F
-
-    meta = spark.table(meta_table)
-    if "version" in meta.columns:
-        return meta.orderBy(F.col("version").desc()).first()
-    return meta.first()
-
-
-def meta_version(m) -> int:
-    """Generation pointer of a meta row (0 when the column predates
-    versioning)."""
-    return int(m.version) if "version" in m.__fields__ else 0
-
-
-def generation_in_warehouse(spark: SparkSession, name: str) -> bool:
-    """True when a physical generation's files live at the session
-    warehouse's default directory for that name — managed tables, and
-    external tables registered by the ``attach_*`` default.  Compaction
-    requires this: a new generation always lands in the warehouse, so
-    compacting an index whose current generation sits at a CUSTOM
-    location would split the index across directories (and the old
-    files there are someone else's to reclaim)."""
-    import os
-
-    loc = _table_location(spark, name)
-    if loc is None:
-        return True
-    default = os.path.join(_warehouse_path(spark), name.lower())
-    return os.path.realpath(loc) == os.path.realpath(default)
-
-
-def drop_versioned_siblings(spark: SparkSession, base: str,
-                            keep_version: int) -> None:
-    """Remove every physical generation of logical table ``base`` except
-    ``keep_version`` — catalog entries AND files.  Run by ``build_*``
-    (keep 0: a rebuild starts the history over) and by compaction (keep
-    the current pointer: sweeps both the un-dropped previous generation
-    of a crashed cleanup and the half-written target of a crashed
-    rewrite).  Generations are discovered from the catalog and the
-    warehouse directory listing, so orphans with no catalog entry are
-    swept too."""
-    import os
-    import re
-
-    pat = re.compile(rf"^{re.escape(base.lower())}(_v(\d+))?$")
-    found: dict[int, str] = {}
-    wh = _warehouse_path(spark)
-    if wh and os.path.isdir(wh):
-        for d in os.listdir(wh):
-            mt = pat.match(d)
-            if mt and os.path.isdir(os.path.join(wh, d)):
-                found[int(mt.group(2) or 0)] = d
-    for v, name in found.items():
-        if v != keep_version:
-            drop_table_and_files(spark, versioned_name(base, v))
-    # catalog entries pointing elsewhere (externally-attached generations)
-    for t in spark.catalog.listTables():
-        mt = pat.match(t.name.lower())
-        if mt and int(mt.group(2) or 0) != keep_version:
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-
-
 def attach_table(spark: SparkSession, table_name: str,
                  location: str | None = None) -> None:
     """(Re-)register an on-disk parquet table in the catalog as an

@@ -161,47 +161,29 @@ def similarity_join_ab_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ensure_ab_index(spark: SparkSession, sf_dir: str) -> str:
     """Session-amortized build of the gate's A/B corpus index (even-id
     documents, the README join's banding plan); returns the index name.
-    Build once per session, keyed on the banding parameters pinned in
-    the meta row: a parameter change still forces a rebuild (gate
-    hermeticity), but same-session reruns — the bench's best-of-N —
-    reuse the index and time the PROBE only, which is the number that
-    matters at deployment (the build amortizes across every probe).
-    A fresh session (the driver's correctness run) has an empty
-    in-memory catalog, so it always builds.  Build wall goes to stderr
-    so bench logs keep the two costs separate.  Shared by the streaming
-    probe and the index-stats gate queries."""
+    Keyed on the banding parameters pinned in the meta row
+    (``sources/index.py::ensure``): bench's best-of-N reruns reuse the
+    index and time the PROBE only, which is the number that matters at
+    deployment.  Shared by the streaming probe and the index-stats gate
+    queries."""
     from ..operators.lsh_queries import _JOIN_AB_PLAN
     from ..operators.similarity_join import build_lsh_corpus_index
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..sources import index as ix
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.where(F.col("doc_id") % 2 == 0).selectExpr(
-        "doc_id AS corpus_id", "text")
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     index = f"lshidx_ab_{tag}"
     want = dict(text_col="text", id_col="corpus_id", ngram_width=3,
                 band_count=int(_JOIN_AB_PLAN.band_count),
                 band_size=int(_JOIN_AB_PLAN.band_size), seed=123)
-    have = None
-    if spark.catalog.tableExists(f"{index}_meta"):
-        from ..sources.formats import index_meta
 
-        m = index_meta(spark, f"{index}_meta")
-        have = dict(text_col=m.text_col, id_col=m.id_col,
-                    ngram_width=m.ngram_width, band_count=m.band_count,
-                    band_size=m.band_size, seed=m.seed)
-    if have != want:
-        import sys
-        import time
-
-        t0 = time.perf_counter()
+    def build() -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        corpus = docs.where(F.col("doc_id") % 2 == 0).selectExpr(
+            "doc_id AS corpus_id", "text")
         build_lsh_corpus_index(corpus, index, **want)
-        print(f"# ensure_ab_index: index build took "
-              f"{time.perf_counter() - t0:.2f}s (reused by later runs "
-              f"in this session — probe-only wall from run 2 on)",
-              file=sys.stderr)
-    return index
+
+    return ix.ensure(spark, ix.LSH, index, want, build)
 
 
 def near_dup_index_probe_streaming(spark: SparkSession,
@@ -542,41 +524,26 @@ def boolean_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ensure_cdc_index(spark: SparkSession, sf_dir: str) -> str:
     """Session-amortized build of the gate's CDC chunk index (even-id
-    documents, default chunking params); returns the index name.  Same
-    reuse contract as ``ensure_ab_index``: rebuilds when the meta row's
-    parameters differ from the wanted ones, reuses otherwise — shared
-    by the batch probe, the streaming probe, and the index-stats gate
-    queries."""
+    documents, default chunking params; ``sources/index.py::ensure``);
+    returns the index name.  Shared by the batch probe, the streaming
+    probe, and the index-stats gate queries."""
     from ..operators.dedup import (_CDC_BASE, _CDC_DIVISOR, _CDC_WINDOW,
                                    build_cdc_chunk_index)
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..sources import index as ix
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.where(F.col("doc_id") % 2 == 0)
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     index = f"cdcidx_{tag}"
     want = dict(id_col="doc_id", text_col="text",
                 window=int(_CDC_WINDOW), base=int(_CDC_BASE),
                 divisor=int(_CDC_DIVISOR))
-    have = None
-    if spark.catalog.tableExists(f"{index}_meta"):
-        from ..sources.formats import index_meta
 
-        m = index_meta(spark, f"{index}_meta")
-        have = dict(id_col=m.id_col, text_col=m.text_col,
-                    window=int(m.window), base=int(m.base),
-                    divisor=int(m.divisor))
-    if have != want:
-        import sys
-        import time
+    def build() -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        build_cdc_chunk_index(docs.where(F.col("doc_id") % 2 == 0), index,
+                              **want)
 
-        t0 = time.perf_counter()
-        build_cdc_chunk_index(corpus, index, **want)
-        print(f"# ensure_cdc_index: chunk-index build took "
-              f"{time.perf_counter() - t0:.2f}s (reused by later runs "
-              f"in this session)", file=sys.stderr)
-    return index
+    return ix.ensure(spark, ix.CDC, index, want, build)
 
 
 def chunk_novelty_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,46 +23,28 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.formats import index_meta
+from ..sources import index as ix
 from .documents import _write_batch_idempotent
+
+
+def _tag(sf_dir: str) -> str:
+    return os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
 
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Session-amortized build of the gate's persisted IVF index over
-    the embeddings table (the ``ann_ivf_topk`` parameters); returns the
-    index name.  Build once per session, keyed on the meta-pinned
-    parameters (same amortization pattern as ``ensure_ab_index``: fresh
-    sessions always build, same-session reruns time the probe only).
-    Shared by the streaming search and the index-stats gate queries."""
+    the embeddings table (the ``ann_ivf_topk`` parameters;
+    ``sources/index.py::ensure``); returns the index name.  Shared by
+    the streaming search and the index-stats gate queries."""
     from ..operators.ann import build_ivf_index
     from ..operators.pipeline_queries import _IVF_ITERS, _IVF_LISTS
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
-    emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    index = f"ivfidx_{tag}"
+    index = f"ivfidx_{_tag(sf_dir)}"
     want = dict(vec_col="embedding", id_col="vec_id",
                 n_lists=int(_IVF_LISTS), n_iters=int(_IVF_ITERS))
-    have = None
-    if spark.catalog.tableExists(f"{index}_meta"):
-        m = index_meta(spark, f"{index}_meta")
-        have = dict(vec_col=m.vec_col, id_col=m.id_col,
-                    n_lists=m.n_lists,
-                    n_iters=m.n_iters if "n_iters" in m.__fields__
-                    else None)
-    if have != want:
-        import sys
-        import time
-
-        t0 = time.perf_counter()
-        build_ivf_index(emb, index, vec_col="embedding",
-                        id_col="vec_id", n_lists=_IVF_LISTS,
-                        n_iters=_IVF_ITERS)
-        print(f"# ensure_ivf_index: index build took "
-              f"{time.perf_counter() - t0:.2f}s (reused by later runs "
-              f"in this session)", file=sys.stderr)
-    return index
+    return ix.ensure(spark, ix.IVF, index, want, lambda: build_ivf_index(
+        load_table(spark, sf_dir, "embeddings"), index, **want))
 
 
 def ann_ivf_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,7 +60,7 @@ def ann_ivf_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index = ensure_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = _tag(sf_dir)
 
     stream = (
         spark.readStream.schema(emb.schema)
@@ -133,7 +115,7 @@ def ann_pq_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index = ensure_pq_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    tag = _tag(sf_dir)
 
     stream = (
         spark.readStream.schema(emb.schema)
@@ -192,44 +174,20 @@ def ensure_ivf_sq8_index(spark: SparkSession, sf_dir: str) -> str:
     driver-row history are untouched."""
     from ..operators.ann import build_ivf_index
     from ..operators.pipeline_queries import _IVF_ITERS, _IVF_LISTS, _SQ8_DIM
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
-    emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    index = f"ivfsq8idx_{tag}"
+    index = f"ivfsq8idx_{_tag(sf_dir)}"
     want = dict(vec_col="embedding", id_col="vec_id",
                 n_lists=int(_IVF_LISTS), n_iters=int(_IVF_ITERS),
                 storage="sq8", dim=int(_SQ8_DIM))
-    have = None
-    if spark.catalog.tableExists(f"{index}_meta"):
-        m = index_meta(spark, f"{index}_meta")
-        have = dict(vec_col=m.vec_col, id_col=m.id_col,
-                    n_lists=m.n_lists, n_iters=m.n_iters,
-                    storage=m.storage if "storage" in m.__fields__
-                    else "float32",
-                    # pre-dim meta rows (round 7) force one rebuild
-                    dim=m.dim if "dim" in m.__fields__ else None)
-    if have != want:
-        import sys
-        import time
-
-        t0 = time.perf_counter()
-        build_ivf_index(emb, index, vec_col="embedding",
-                        id_col="vec_id", n_lists=_IVF_LISTS,
-                        n_iters=_IVF_ITERS, storage="sq8", dim=_SQ8_DIM)
-        print(f"# ensure_ivf_sq8_index: index build took "
-              f"{time.perf_counter() - t0:.2f}s (reused by later runs "
-              f"in this session)", file=sys.stderr)
-    return index
+    return ix.ensure(spark, ix.IVF, index, want, lambda: build_ivf_index(
+        load_table(spark, sf_dir, "embeddings"), index, **want))
 
 
 def ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
     """Session-amortized build of the gate's persisted PQ index over the
-    embeddings table (the ``ann_pq_topk`` parameters); same contract as
-    ``ensure_ivf_index``: fresh sessions build, parameter changes force
-    a rebuild via the meta row, same-session reruns time the probe
-    only."""
+    embeddings table (the ``ann_pq_topk`` parameters;
+    ``sources/index.py::ensure``)."""
     from ..operators.ann import build_pq_index
     from ..operators.pipeline_queries import (
         _PQ_CODES,
@@ -237,38 +195,19 @@ def ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
         _PQ_ITERS,
         _PQ_M,
     )
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
-    emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    index = f"pqidx_{tag}"
+    index = f"pqidx_{_tag(sf_dir)}"
     want = dict(vec_col="embedding", id_col="vec_id", m=int(_PQ_M),
                 n_codes=int(_PQ_CODES), n_iters=int(_PQ_ITERS),
                 dim=int(_PQ_DIM))
-    have = None
-    if spark.catalog.tableExists(f"{index}_meta"):
-        mt = index_meta(spark, f"{index}_meta")
-        have = dict(vec_col=mt.vec_col, id_col=mt.id_col, m=mt.m,
-                    n_codes=mt.n_codes, n_iters=mt.n_iters, dim=mt.dim)
-    if have != want:
-        import sys
-        import time
-
-        t0 = time.perf_counter()
-        build_pq_index(emb, index, vec_col="embedding", id_col="vec_id",
-                       m=_PQ_M, n_codes=_PQ_CODES, n_iters=_PQ_ITERS,
-                       dim=_PQ_DIM)
-        print(f"# ensure_pq_index: index build took "
-              f"{time.perf_counter() - t0:.2f}s (reused by later runs "
-              f"in this session)", file=sys.stderr)
-    return index
+    return ix.ensure(spark, ix.PQ, index, want, lambda: build_pq_index(
+        load_table(spark, sf_dir, "embeddings"), index, **want))
 
 
 def ensure_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str:
     """Session-amortized build of the gate's persisted IVF-PQ index
-    (the ``ann_ivf_pq_topk`` parameters); same contract as the other
-    ensure_* helpers."""
+    (the ``ann_ivf_pq_topk`` parameters; ``sources/index.py::ensure``)."""
     from ..operators.ann import build_ivf_pq_index
     from ..operators.pipeline_queries import (
         _IVF_ITERS,
@@ -278,34 +217,14 @@ def ensure_ivf_pq_index(spark: SparkSession, sf_dir: str) -> str:
         _PQ_ITERS,
         _PQ_M,
     )
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
-    emb = load_table(spark, sf_dir, "embeddings")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    index = f"ivfpqidx_{tag}"
+    index = f"ivfpqidx_{_tag(sf_dir)}"
     want = dict(vec_col="embedding", id_col="vec_id",
                 n_lists=int(_IVF_LISTS), cells_iters=int(_IVF_ITERS),
                 m=int(_PQ_M), n_codes=int(_PQ_CODES),
                 pq_iters=int(_PQ_ITERS), dim=int(_PQ_DIM))
-    have = None
-    if spark.catalog.tableExists(f"{index}_meta"):
-        mt = index_meta(spark, f"{index}_meta")
-        have = dict(vec_col=mt.vec_col, id_col=mt.id_col,
-                    n_lists=mt.n_lists, cells_iters=mt.cells_iters,
-                    m=mt.m, n_codes=mt.n_codes, pq_iters=mt.pq_iters,
-                    dim=mt.dim)
-    if have != want:
-        import sys
-        import time
-
-        t0 = time.perf_counter()
-        build_ivf_pq_index(emb, index, vec_col="embedding",
-                           id_col="vec_id", n_lists=_IVF_LISTS,
-                           cells_iters=_IVF_ITERS, m=_PQ_M,
-                           n_codes=_PQ_CODES, pq_iters=_PQ_ITERS,
-                           dim=_PQ_DIM)
-        print(f"# ensure_ivf_pq_index: index build took "
-              f"{time.perf_counter() - t0:.2f}s (reused by later runs "
-              f"in this session)", file=sys.stderr)
-    return index
+    return ix.ensure(spark, ix.IVF_PQ, index, want,
+                     lambda: build_ivf_pq_index(
+                         load_table(spark, sf_dir, "embeddings"), index,
+                         **want))

@@ -11,13 +11,13 @@ times both forms on the same corpus and asserts bit-equal output.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 100
 TF = int(sys.argv[2]) if len(sys.argv) > 2 else 1000
@@ -45,12 +45,13 @@ def _unbanded(pos_post, queries, window):
 
 
 def main():
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "16g")
-             .getOrCreate())
     from lsh_spark.operators.retrieval import proximity_search
+    from lsh_spark.plans import get_spark
     from lsh_spark.operators.training_ops import _words
+
+    spark = get_spark(app_name="lsh_spark-prox-hot", master="local[32]",
+                      shuffle_partitions=32,
+                      extra_conf={"spark.driver.memory": "16g"})
 
     # each doc: TF interleaved (alpha, beta) occurrences separated by
     # one filler token -> both query terms at tf ~10^3, every alpha

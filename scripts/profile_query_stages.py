@@ -22,6 +22,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -98,15 +99,10 @@ def parse_event_log(event_dir: str):
     return stage, names, stage_group
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("queries", nargs="+")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--no-warm", action="store_true")
-    args = ap.parse_args()
-
-    event_dir = tempfile.mkdtemp(prefix="lsh_spark_events_")
+def run_queries(args, event_dir: str) -> "dict[str, list[float]]":
+    """Run each query ``args.runs`` times under an event-logging session
+    (one job group per run) and return the walls; the session is
+    stopped so the event log is complete on disk."""
     spark = make_spark(event_dir)
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry
@@ -142,8 +138,23 @@ def main() -> None:
             spark.catalog.clearCache()
     spark.stop()
     time.sleep(1.0)
+    return walls
 
-    stage, names, stage_group = parse_event_log(event_dir)
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--no-warm", action="store_true")
+    args = ap.parse_args()
+
+    event_dir = tempfile.mkdtemp(prefix="lsh_spark_events_")
+    try:
+        walls = run_queries(args, event_dir)
+        stage, names, stage_group = parse_event_log(event_dir)
+    finally:
+        shutil.rmtree(event_dir, ignore_errors=True)
     for name in args.queries:
         ws = walls[name]
         best = ws.index(min(ws))

@@ -404,14 +404,21 @@ def test_bloom_text_col_mismatch_raises(spark):
     assert all(r.bloom_hit for r in hits)
 
 
-def test_ensure_bloom_index_rebuilds_partial_index(spark):
-    """A meta row without its _words/_stats siblings is a PARTIAL index
-    and must rebuild, not fail downstream (round-11 advice)."""
+@pytest.mark.parametrize("family, table", [
+    ("bloom", "words"), ("ab", "sets"), ("cdc", "chunks")])
+def test_ensure_bloom_index_rebuilds_partial_index(spark, family, table):
+    """A meta row without one of its current-generation tables is a
+    PARTIAL index (e.g. a same-parameter rebuild that died mid-write:
+    the overwrite drops the table first) and must rebuild, not fail
+    downstream — for every ensure_* index."""
     from lsh_spark.operators.pipeline_queries import ensure_bloom_index
+    from lsh_spark.streaming.documents import ensure_ab_index, ensure_cdc_index
 
+    ensure = {"bloom": ensure_bloom_index, "ab": ensure_ab_index,
+              "cdc": ensure_cdc_index}[family]
     sf_dir = "/root/testdata/sf0.001"
-    name = ensure_bloom_index(spark, sf_dir)
-    spark.sql(f"DROP TABLE {name}_words")
-    assert ensure_bloom_index(spark, sf_dir) == name
-    assert spark.catalog.tableExists(f"{name}_words")
-    assert spark.table(f"{name}_words").count() > 0
+    name = ensure(spark, sf_dir)
+    spark.sql(f"DROP TABLE {name}_{table}")
+    assert ensure(spark, sf_dir) == name
+    assert spark.catalog.tableExists(f"{name}_{table}")
+    assert spark.table(f"{name}_{table}").count() > 0

@@ -357,6 +357,14 @@ def test_ivf_pq_index_lifecycle(spark):
         again = sorted(map(tuple, ann.search_ivf_pq_index(
             spark, name2, queries, k=40, n_probe=3).collect()))
         assert again == sorted(map(tuple, live))
+        # the attached copy keeps build's bucket spec: extend appends
+        ann.extend_ivf_pq_index(
+            spark.createDataFrame([(40, [0.5] * 8)],
+                                  "vec_id long, embedding array<double>"),
+            name2)
+        grown = ann.search_ivf_pq_index(spark, name2, queries, k=40,
+                                        n_probe=3).collect()
+        assert 40 in {r.neighbor_id for r in grown}
     finally:
         from lsh_spark.sources.formats import drop_table_and_files
 
@@ -1091,11 +1099,8 @@ def test_compact_lsh_index_shrinks_files_preserves_probes(spark):
         extend_lsh_corpus_index,
         lsh_similarity_join_indexed,
     )
-    from lsh_spark.sources.formats import (
-        _warehouse_path,
-        index_meta,
-        meta_version,
-    )
+    from lsh_spark.sources.formats import _warehouse_path
+    from lsh_spark.sources.index import index_meta, meta_version
     from lsh_spark.sources.io import load_table
 
     def n_files(table):
@@ -1488,11 +1493,8 @@ def test_compact_swap_is_probe_safe(spark):
         delete_from_lsh_index,
         lsh_similarity_join_indexed,
     )
-    from lsh_spark.sources.formats import (
-        _warehouse_path,
-        index_meta,
-        meta_version,
-    )
+    from lsh_spark.sources.formats import _warehouse_path
+    from lsh_spark.sources.index import index_meta, meta_version
     from lsh_spark.sources.io import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -2121,6 +2123,7 @@ def test_text_index_lifecycle(spark):
         bm25_topk,
         build_text_index,
         delete_from_text_index,
+        extend_text_index,
         text_index_stats,
     )
 
@@ -2173,6 +2176,15 @@ def test_text_index_lifecycle(spark):
                            bm25_search_indexed(spark, name2, queries,
                                                k=5).collect()))
         assert again == fresh  # tombstones re-attached too
+        # the attached copy keeps build's bucket spec: extend appends
+        extra = spark.createDataFrame([(40, "alpha beta w3 tail")],
+                                      "doc_id long, text string")
+        extend_text_index(extra, name2)
+        grown = sorted(map(tuple,
+                           bm25_search_indexed(spark, name2, queries,
+                                               k=5).collect()))
+        assert grown == sorted(map(tuple, bm25_topk(
+            surv.unionByName(extra), queries, k=5).collect()))
     finally:
         from lsh_spark.sources.formats import drop_table_and_files
 
@@ -2326,6 +2338,17 @@ def test_text_index_compaction(spark):
         assert spark.catalog.tableExists(f"{name}_postings_v1")
         assert not spark.catalog.tableExists(f"{name}_deletes")
         assert text_index_stats(spark, name).first().n_docs == 28
+        # the compacted generation keeps build's bucket spec, so an
+        # extend can append into it
+        extra = spark.createDataFrame(
+            [(i, f"alpha gamma w{i % 4} tail") for i in range(30, 34)],
+            "doc_id long, text string")
+        extend_text_index(extra, name)
+        grown = sorted(map(tuple,
+                           bm25_search_indexed(spark, name, queries,
+                                               k=8).collect()))
+        assert grown == sorted(map(tuple, bm25_topk(
+            surv.unionByName(extra), queries, k=8).collect()))
     finally:
         from lsh_spark.sources.formats import drop_table_and_files
 

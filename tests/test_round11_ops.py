@@ -358,7 +358,7 @@ def test_cdc_index_extend_and_compact(spark):
         delete_from_cdc_index,
         extend_cdc_chunk_index,
     )
-    from lsh_spark.sources.formats import index_meta, meta_version
+    from lsh_spark.sources.index import index_meta, meta_version
     from lsh_spark.sources.io import load_table
 
     sf = "/root/testdata/sf0.001"

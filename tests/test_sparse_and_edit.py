@@ -476,24 +476,34 @@ def test_phrase_indexed_equals_on_the_fly_through_lifecycle(spark):
 
 
 def test_phrase_indexed_requires_positional_build(spark):
-    """A non-positional index refuses phrase probes loudly."""
+    """A non-positional index refuses phrase probes loudly — also when it
+    is a rebuild of a positional one, whose positions table the rebuild
+    drops from the catalog and the warehouse."""
+    import os
+
     import pytest
 
     from lsh_spark.operators.retrieval import (
         build_text_index,
         phrase_search_indexed,
     )
-    from lsh_spark.sources.formats import drop_table_and_files
+    from lsh_spark.sources.formats import _warehouse_path, drop_table_and_files
 
     name = "t_phraseidx_nopos"
+    docs = _docs(spark, [(1, "alpha beta")])
     try:
-        build_text_index(
-            _docs(spark, [(1, "alpha beta")]), name, num_buckets=2)
+        build_text_index(docs, name, num_buckets=2, positional=True)
+        assert spark.catalog.tableExists(f"{name}_positions")
+        build_text_index(docs, name, num_buckets=2)
+        assert not spark.catalog.tableExists(f"{name}_positions")
+        assert not os.path.isdir(
+            os.path.join(_warehouse_path(spark), f"{name}_positions"))
         with pytest.raises(ValueError, match="positional"):
             phrase_search_indexed(
                 spark, name, _phrase_queries(spark, ["alpha beta"]))
     finally:
-        for sfx in ("_postings", "_doclen", "_stats", "_meta"):
+        for sfx in ("_postings", "_doclen", "_stats", "_meta",
+                    "_positions"):
             drop_table_and_files(spark, f"{name}{sfx}")
 
 
