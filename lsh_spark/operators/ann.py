@@ -1022,6 +1022,16 @@ def attach_ivf_pq_index(spark, table_name: str,
     ix.attach(spark, ix.IVF_PQ, table_name, location_root)
 
 
+def compact_ivf_pq_index(spark, table_name: str, *,
+                         keep_previous: bool = False) -> None:
+    """Maintenance pass after ``extend_ivf_pq_index`` appends and
+    ``delete_from_pq_index`` tombstones (``sources/index.py::compact``):
+    the cell-bucketed codes are rewritten with tombstoned vectors folded
+    out; centroids and codebooks are untouched (nothing retrains), so
+    results are unchanged."""
+    ix.compact(spark, ix.IVF_PQ, table_name, keep_previous=keep_previous)
+
+
 # ---------------------------------------------------------------------------
 # persisted PQ index — the encode-once shape of pq_topk: codebooks are
 # trained once, the corpus persists as m ints per vector, and every

@@ -2146,18 +2146,10 @@ def corpus_summary_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintains running state per group (no watermark — a global rollup
     never expires), drained AvailableNow into a memory sink.  Shares
     the batch twin's exact oracle."""
-    from ..sources.io import _ensure_session_confs
-    from ..streaming.events import run_available_now
+    from ..streaming.drain import file_stream, run_available_now
 
-    _ensure_session_confs(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     agg = (
-        stream.select(
+        file_stream(spark, sf_dir, "documents").select(
             T.lang_guess("text").alias("lang"),
             T.char_count("text").alias("__chars"),
             T.token_count("text").alias("__tokens"),
@@ -2177,8 +2169,7 @@ def corpus_summary_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "AS DOUBLE)").alias("avg_quality"),
         )
     )
-    q = run_available_now(agg, "corpus_summary_streaming_sink", "complete")
-    q.awaitTermination()
+    run_available_now(agg, "corpus_summary_streaming_sink", "complete")
     return spark.table("corpus_summary_streaming_sink")
 
 

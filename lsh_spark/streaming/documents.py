@@ -17,23 +17,12 @@ join logic is unchanged.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _write_batch_idempotent(matches: DataFrame, out_dir: str,
-                            batch_id: int) -> None:
-    """foreachBatch provides at-least-once delivery: after a mid-run
-    failure the restarted query REPLAYS the last uncommitted micro-batch,
-    so a bare ``mode("append")`` would duplicate its rows.  Keying the
-    write on ``batch_id`` (one overwritten partition directory per batch)
-    makes the replay rewrite the same files instead — the standard
-    idempotent-sink recipe.  Readers see ``batch_id`` as a discovered
-    partition column; every consumer selects named columns."""
-    matches.write.mode("overwrite").parquet(
-        f"{out_dir}/batch_id={batch_id}")
+from .drain import (_start_batches, _write_batch_idempotent, drain,
+                    file_stream, run_available_now)
 
 
 def streaming_similarity_join(
@@ -55,22 +44,16 @@ def streaming_similarity_join(
     matches to ``out_dir`` as parquet.  Returns the StreamingQuery."""
     from ..operators.similarity_join import lsh_similarity_join
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        matches = lsh_similarity_join(
-            batch_df, corpus, text_col, text_col,
+    return _start_batches(
+        stream_docs,
+        lambda batch: lsh_similarity_join(
+            batch, corpus, text_col, text_col,
             left_id=left_id, right_id=right_id,
             ngram_width=ngram_width, band_count=band_count,
-            band_size=band_size, seed=seed, threshold=threshold)
-        _write_batch_idempotent(matches, out_dir, batch_id)
-
-    return (
-        stream_docs.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+            band_size=band_size, seed=seed, threshold=threshold),
+        lambda matches, batch_id: _write_batch_idempotent(
+            matches, out_dir, batch_id),
+        checkpoint_dir)
 
 
 def streaming_near_dup_against_index(
@@ -93,20 +76,28 @@ def streaming_near_dup_against_index(
     side every batch); match results are identical."""
     from ..operators.similarity_join import lsh_similarity_join_indexed
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        matches = lsh_similarity_join_indexed(
-            spark, index_table, batch_df, text_col,
-            probe_id=id_col, threshold=threshold)
-        _write_batch_idempotent(matches, out_dir, batch_id)
+    return _start_batches(
+        stream_docs,
+        lambda batch: lsh_similarity_join_indexed(
+            spark, index_table, batch, text_col,
+            probe_id=id_col, threshold=threshold),
+        lambda matches, batch_id: _write_batch_idempotent(
+            matches, out_dir, batch_id),
+        checkpoint_dir)
 
-    return (
-        stream_docs.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+
+def _ab_drain(spark: SparkSession, name: str, sf_dir: str,
+              step) -> DataFrame:
+    """The A/B gate stream: odd-id documents arrive as (probe_id, text)
+    probes, ``step`` matches each micro-batch against the even-id
+    corpus, and the matches come back with jaccard at 6dp."""
+    stream = (file_stream(spark, sf_dir, "documents")
+              .where(F.col("doc_id") % 2 == 1)
+              .selectExpr("doc_id AS probe_id", "text"))
+    out = drain(spark, name, sf_dir, stream, step,
+                "probe_id long, corpus_id long, jaccard double")
+    return out.select(
+        "probe_id", "corpus_id", F.round("jaccard", 6).alias("jaccard"))
 
 
 def similarity_join_ab_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,44 +109,18 @@ def similarity_join_ab_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet sink.  Carries the same exact DuckDB oracle as the batch twin
     (banding + verification reproduced in SQL, so recall loss cancels)."""
     from ..operators.lsh_queries import _JOIN_AB_PLAN
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..operators.similarity_join import lsh_similarity_join
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.where(F.col("doc_id") % 2 == 0).selectExpr(
-        "doc_id AS corpus_id", "text")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("doc_id") % 2 == 1)
-        .selectExpr("doc_id AS probe_id", "text")
-    )
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/lsh_spark_stream_ab_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_ab_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = streaming_similarity_join(
-            stream, corpus, out_dir, ckpt,
+    corpus = load_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") % 2 == 0).selectExpr("doc_id AS corpus_id", "text")
+    return _ab_drain(
+        spark, "similarity_join_ab_streaming", sf_dir,
+        lambda batch: lsh_similarity_join(
+            batch, corpus, "text", "text",
             left_id="probe_id", right_id="corpus_id",
             ngram_width=3, band_count=_JOIN_AB_PLAN.band_count,
-            band_size=_JOIN_AB_PLAN.band_size, seed=123, threshold=0.7)
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "probe_id long, corpus_id long, jaccard double")
-    return spark.read.parquet(out_dir).select(
-        "probe_id", "corpus_id", F.round("jaccard", 6).alias("jaccard"))
+            band_size=_JOIN_AB_PLAN.band_size, seed=123, threshold=0.7))
 
 
 def ensure_ab_index(spark: SparkSession, sf_dir: str) -> str:
@@ -200,39 +165,14 @@ def near_dup_index_probe_streaming(spark: SparkSession,
     ``similarity_join_ab_streaming``, so it carries the identical exact
     DuckDB oracle — the recompute twin and the indexed probe must agree
     to the hash."""
-    from ..sources.io import load_table
+    from ..operators.similarity_join import lsh_similarity_join_indexed
 
     index = ensure_ab_index(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("doc_id") % 2 == 1)
-        .selectExpr("doc_id AS probe_id", "text")
-    )
-    out_dir = f"/tmp/lsh_spark_stream_idx_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_idx_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = streaming_near_dup_against_index(
-            stream, spark, index, out_dir, ckpt,
-            text_col="text", id_col="probe_id", threshold=0.7)
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "probe_id long, corpus_id long, jaccard double")
-    return spark.read.parquet(out_dir).select(
-        "probe_id", "corpus_id", F.round("jaccard", 6).alias("jaccard"))
+    return _ab_drain(
+        spark, "near_dup_index_probe_streaming", sf_dir,
+        lambda batch: lsh_similarity_join_indexed(
+            spark, index, batch, "text", probe_id="probe_id",
+            threshold=0.7))
 
 
 def _oracle() -> str:
@@ -253,16 +193,8 @@ def pii_scrub_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical exact oracle as the batch twin (``pii_scrub_stats``), so
     batch/stream parity is driver-checked."""
     from ..functions import pii
-    from ..sources.io import _ensure_session_confs, load_table
-    from .events import run_available_now
 
-    _ensure_session_confs(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = file_stream(spark, sf_dir, "documents")
     d = F.col("doc_id")
     planted = stream.select(
         "doc_id",
@@ -289,8 +221,7 @@ def pii_scrub_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         pii.phone_count("text").alias("n_phones"),
         pii.redact_pii("text").alias("clean_text"),
     )
-    q = run_available_now(scrubbed, "pii_scrub_streaming_sink", "append")
-    q.awaitTermination()
+    run_available_now(scrubbed, "pii_scrub_streaming_sink", "append")
     return spark.table("pii_scrub_streaming_sink")
 
 
@@ -317,19 +248,10 @@ def media_features_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch/stream parity of the media pipeline is driver-checked."""
     from ..multimodal.audio import mp3_stream_features
     from ..multimodal.media import synthesize_mp3_audio_from_documents
-    from ..sources.io import _ensure_session_confs, load_table
-    from .events import run_available_now
 
-    _ensure_session_confs(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    feats = mp3_stream_features(synthesize_mp3_audio_from_documents(stream))
-    q = run_available_now(feats, "media_features_streaming_sink", "append")
-    q.awaitTermination()
+    feats = mp3_stream_features(synthesize_mp3_audio_from_documents(
+        file_stream(spark, sf_dir, "documents")))
+    run_available_now(feats, "media_features_streaming_sink", "append")
     return spark.table("media_features_streaming_sink")
 
 
@@ -343,53 +265,17 @@ def bm25_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     through their buckets.  Batch/stream parity is by construction —
     the operator is the same one the batch gate pins — so the oracle is
     the batch BM25 replay with the query CTE drawn from documents."""
-    import shutil
-
-    from ..operators.retrieval import bm25_search_indexed, ensure_text_index
-    from ..sources.io import load_table
-
     from ..operators.pipeline_queries import _BM25_K, _BM25_STREAM_Q
+    from ..operators.retrieval import bm25_search_indexed, ensure_text_index
 
     index = ensure_text_index(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("doc_id") < _BM25_STREAM_Q)
-        .selectExpr("doc_id AS query_id", "text AS query_text")
-    )
-    out_dir = f"/tmp/lsh_spark_stream_bm25_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_bm25_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = bm25_search_indexed(spark, index, batch_df, k=_BM25_K)
-        _write_batch_idempotent(res, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, score double, rank int")
-    return spark.read.parquet(out_dir).select(
-        "query_id", "doc_id", "score", "rank")
+    stream = (file_stream(spark, sf_dir, "documents")
+              .where(F.col("doc_id") < _BM25_STREAM_Q)
+              .selectExpr("doc_id AS query_id", "text AS query_text"))
+    return drain(
+        spark, "bm25_search_streaming", sf_dir, stream,
+        lambda batch: bm25_search_indexed(spark, index, batch, k=_BM25_K),
+        "query_id long, doc_id long, score double, rank int")
 
 
 def phrase_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,60 +288,26 @@ def phrase_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed table.  Batch/stream parity is by construction — the same
     operator the batch gate pins — so the oracle is the batch phrase
     replay."""
-    import shutil
-
     from ..operators.pipeline_queries import _PHRASES
     from ..operators.retrieval import (
         ensure_text_index,
         phrase_search_indexed,
     )
-    from ..sources.io import load_table
 
     index = ensure_text_index(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     phrases = F.array(*[F.lit(p) for _qid, p in _PHRASES])
-
     stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
+        file_stream(spark, sf_dir, "documents")
         .where(F.col("doc_id") < len(_PHRASES))
         .select(
             F.col("doc_id").alias("query_id"),
             F.element_at(phrases, (F.col("doc_id") + 1).cast("int"))
             .alias("phrase"))
     )
-    out_dir = f"/tmp/lsh_spark_stream_phrase_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_phrase_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = phrase_search_indexed(spark, index, batch_df)
-        _write_batch_idempotent(res, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "query_id long, doc_id long, n_occurrences long, "
-                "first_pos long")
-    return spark.read.parquet(out_dir).select(
-        "query_id", "doc_id", "n_occurrences", "first_pos")
+    return drain(
+        spark, "phrase_search_streaming", sf_dir, stream,
+        lambda batch: phrase_search_indexed(spark, index, batch),
+        "query_id long, doc_id long, n_occurrences long, first_pos long")
 
 
 def boolean_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,23 +321,14 @@ def boolean_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same operator the batch gate pins — so the oracle is the batch
     boolean replay (corpus-derived, independently pinning the persisted
     postings)."""
-    import shutil
-
     from ..operators.pipeline_queries import _BOOL_QUERIES
     from ..operators.retrieval import boolean_search_indexed, ensure_text_index
-    from ..sources.io import load_table
 
     index = ensure_text_index(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     musts = F.array(*[F.lit(m) for _q, m, _n in _BOOL_QUERIES])
     nots = F.array(*[F.lit(n) for _q, _m, n in _BOOL_QUERIES])
-
     stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
+        file_stream(spark, sf_dir, "documents")
         .where(F.col("doc_id") < len(_BOOL_QUERIES))
         .select(
             F.col("doc_id").alias("query_id"),
@@ -494,32 +337,10 @@ def boolean_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(nots, (F.col("doc_id") + 1).cast("int"))
             .alias("not_terms"))
     )
-    out_dir = f"/tmp/lsh_spark_stream_bool_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_bool_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = boolean_search_indexed(spark, index, batch_df)
-        _write_batch_idempotent(res, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame([], "query_id long, doc_id long")
-    return spark.read.parquet(out_dir).select("query_id", "doc_id")
+    return drain(
+        spark, "boolean_search_streaming", sf_dir, stream,
+        lambda batch: boolean_search_indexed(spark, index, batch),
+        "query_id long, doc_id long")
 
 
 def ensure_cdc_index(spark: SparkSession, sf_dir: str) -> str:
@@ -555,46 +376,15 @@ def chunk_novelty_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``chunk_novelty_docs`` (both sides re-derived from the raw corpus
     in SQL, so the persisted index content is independently pinned)."""
     from ..operators.dedup import chunk_novelty_against_index
-    from ..sources.io import load_table
 
     index = ensure_cdc_index(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/lsh_spark_stream_cdc_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_cdc_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("doc_id") % 2 == 1)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = chunk_novelty_against_index(spark, index, batch_df)
-        _write_batch_idempotent(out, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (stream.writeStream.foreachBatch(process)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "doc_id long, n_unique_chunks long, n_known_chunks long, "
-            "known_frac double")
-    return spark.read.parquet(out_dir).select(
-        "doc_id", "n_unique_chunks", "n_known_chunks", "known_frac")
+    return drain(
+        spark, "chunk_novelty_streaming", sf_dir,
+        file_stream(spark, sf_dir, "documents").where(
+            F.col("doc_id") % 2 == 1),
+        lambda batch: chunk_novelty_against_index(spark, index, batch),
+        "doc_id long, n_unique_chunks long, n_known_chunks long, "
+        "known_frac double")
 
 
 def source_kl_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -612,52 +402,20 @@ def source_kl_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (source, n_tokens, n_types, kl_vs_corpus) over the streamed
     half."""
     from ..operators.training_ops import _words
-    from ..sources.io import _ensure_session_confs, load_table
+    from ..sources.io import load_table
 
-    _ensure_session_confs(spark)
     docs = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/lsh_spark_stream_kl_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_kl_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("doc_id") % 2 == 1)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.select(
+    partials = drain(
+        spark, "source_kl_streaming", sf_dir,
+        file_stream(spark, sf_dir, "documents").where(
+            F.col("doc_id") % 2 == 1),
+        lambda batch: (
+            batch.select(
                 "source", F.explode(_words(F.col("text"))).alias("__w"))
             .groupBy("source", "__w")
-            .agg(F.count(F.lit(1)).alias("__cs"))
-        )
-        _write_batch_idempotent(partial, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (stream.writeStream.foreachBatch(process)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "source string, n_tokens long, n_types long, "
-            "kl_vs_corpus double")
-    sw = (spark.read.parquet(out_dir)
-          .groupBy("source", "__w")
-          .agg(F.sum("__cs").alias("__cs")))
+            .agg(F.count(F.lit(1)).alias("__cs"))),
+        "source string, __w string, __cs long")
+    sw = partials.groupBy("source", "__w").agg(F.sum("__cs").alias("__cs"))
     corpus = (
         docs.select("source",
                     F.explode(_words(F.col("text"))).alias("__w"))
@@ -706,17 +464,8 @@ def bloom_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen = (corpus.select(F.md5(F.col("text")).alias("__hx")).distinct()
             .localCheckpoint(eager=True))
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/lsh_spark_stream_bloom_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_bloom_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
     stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
+        file_stream(spark, sf_dir, "documents")
         .where((F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 10 == 0))
         .select(
             F.when(F.col("doc_id") % 10 == 0,
@@ -724,26 +473,8 @@ def bloom_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("doc_id")).alias("doc_id"),
             "text")
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = bloom_probe_report(batch_df, words, seen,
-                                 m_bits=_BLOOM_M_BITS)
-        _write_batch_idempotent(out, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (stream.writeStream.foreachBatch(process)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "doc_id long, bloom_hit boolean, exact_dup boolean")
-    return spark.read.parquet(out_dir).select(
-        "doc_id", "bloom_hit", "exact_dup")
+    return drain(
+        spark, "bloom_dedup_streaming", sf_dir, stream,
+        lambda batch: bloom_probe_report(batch, words, seen,
+                                         m_bits=_BLOOM_M_BITS),
+        "doc_id long, bloom_hit boolean, exact_dup boolean")

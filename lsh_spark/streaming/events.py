@@ -14,8 +14,8 @@ Patterns covered (the standard production shapes):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
-from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,12 +31,23 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .drain import (
+    _start_batches,
+    drain,
+    file_stream,
+    run_available_now,
+    scoped_state_partitions,  # noqa: F401  (re-exported)
+    scratch_dir,
+)
+
+# the events parquet schema as the file stores it; read_events_stream
+# reads the same schema from load_table's cache (sources/io.py)
 EVENTS_SCHEMA = StructType([
     StructField("event_id", LongType(), True),
     # parquet TIMESTAMP(NANOS): Spark 4.1 reads it as TIMESTAMP_NTZ
     # truncated to micros (forcing LongType here would ALSO yield micros,
     # not nanos — see sources/io.py).  Declaring NTZ keeps the unit
-    # unambiguous; the reader casts NTZ -> timestamp below.
+    # unambiguous; the reader casts NTZ -> timestamp.
     StructField("ts", TimestampNTZType(), True),
     StructField("user_id", LongType(), True),
     StructField("event_type", StringType(), True),
@@ -48,16 +59,12 @@ EVENTS_SCHEMA = StructType([
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (one file per batch).
 
-    ``ts`` decode mirrors the batch path (``sources/io.py``): the NTZ
-    value is reinterpreted as a UTC instant (session tz is UTC, so the
-    cast is bit-for-bit identical to the batch result)."""
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-    return raw.withColumn("ts", F.col("ts").cast(TimestampType()))
+    ``ts`` decode mirrors the batch path (``sources/io.py``): parquet
+    TIMESTAMP(NANOS) arrives as TIMESTAMP_NTZ truncated to micros, and
+    the NTZ value is reinterpreted as a UTC instant (session tz is UTC,
+    so the cast is bit-for-bit identical to the batch result)."""
+    return file_stream(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast(TimestampType()))
 
 
 def windowed_event_counts(
@@ -128,64 +135,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def run_available_now(stream_df: DataFrame, query_name: str,
-                      output_mode: str = "complete",
-                      state_partitions: int = 8):
-    """Drain every available input with AvailableNow into a memory sink;
-    returns the already-TERMINATED StreamingQuery (a further
-    ``awaitTermination()`` is a no-op; read ``SELECT * FROM
-    <query_name>``).  Use ``complete`` for windowed aggs (finite corpus
-    → last windows never pass the watermark in append mode), ``update``
-    for stateful operators.
-
-    The drain runs under a scoped ``spark.sql.shuffle.partitions``
-    override (restored afterwards): every stateful operator pays a
-    state-store commit PER SHUFFLE PARTITION per micro-batch, which is
-    pure fixed overhead at gate-corpus state sizes — measured at
-    sf0.1/local[32], 32 → 8 partitions halves the streaming queries'
-    wall (events_error_click_pairs 5.7 → 3.0 s, events_hourly 1.7 →
-    1.0 s) with identical results (hash-pinned by the oracles; state
-    partitioning never affects WHAT is emitted).  At real scale size
-    ``state_partitions`` to state volume instead — the override is
-    per-drain, not a session default.
-
-    A leftover sink table from an earlier run in the same session is
-    dropped first — append-mode memory sinks would otherwise accumulate
-    across reruns."""
-    spark = stream_df.sparkSession
-    try:
-        spark.catalog.dropTempView(query_name)
-    except Exception:
-        pass
-    with scoped_state_partitions(spark, state_partitions):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return q
-
-
-@contextmanager
-def scoped_state_partitions(spark: SparkSession, n: int = 8):
-    """Scoped ``spark.sql.shuffle.partitions`` override for a streaming
-    drain (see ``run_available_now`` for the measurement); also used by
-    the foreachBatch drains in ``streaming.documents``/``.vectors``,
-    where 32 → 8 cut wall ~25-35% at sf0.1 (the per-micro-batch join
-    input is a fraction of the corpus, so fewer-but-fuller partitions
-    win).  Always restored — the override must never leak into the
-    session's batch queries."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def streaming_dedup(
     events: DataFrame,
     *,
@@ -243,24 +192,18 @@ def streaming_near_dup_against_corpus(
     # DROP only clears tables the catalog knows; a warehouse directory
     # orphaned by an earlier session would still fail the first append
     clear_stale_table_location(corpus.sparkSession, sink_table)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        matches = lsh_similarity_join(
-            batch_df, corpus, text_col, text_col,
+    return _start_batches(
+        stream_docs,
+        lambda batch: lsh_similarity_join(
+            batch, corpus, text_col, text_col,
             left_id=id_col, right_id=id_col,
             ngram_width=ngram_width, band_count=band_count,
-            band_size=band_size, seed=seed, threshold=threshold)
-        matches.write.mode("append").saveAsTable(sink_table)
-
-    return (
-        stream_docs.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation",
-                f"/tmp/lsh_spark_ckpt_{sink_table}")
-        .start()
-    )
+            band_size=band_size, seed=seed, threshold=threshold),
+        lambda matches, _batch_id: matches.write.mode("append")
+        .saveAsTable(sink_table),
+        # cleared with the table: a kept checkpoint would mark every
+        # input file done, and a rerun would run no batch at all
+        scratch_dir(f"sink_{sink_table}"))
 
 
 def events_hourly_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,8 +219,7 @@ def events_hourly_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_session_confs(spark)
     stream = read_events_stream(spark, sf_dir)
     agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    q = run_available_now(agg, "events_hourly_streaming_sink", "complete")
-    q.awaitTermination()
+    run_available_now(agg, "events_hourly_streaming_sink", "complete")
     return spark.table("events_hourly_streaming_sink").select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
         "event_type", "n_events", "total_value",
@@ -327,8 +269,7 @@ def events_sessions_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events", "total_value",
         )
     )
-    q = run_available_now(agg, "events_sessions_streaming_sink", "complete")
-    q.awaitTermination()
+    run_available_now(agg, "events_sessions_streaming_sink", "complete")
     return spark.table("events_sessions_streaming_sink")
 
 
@@ -377,8 +318,7 @@ def events_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, sf_dir)
     deduped = streaming_dedup(
         stream, key_cols=["user_id", "event_type"], watermark="2 hours")
-    q = run_available_now(deduped, "events_dedup_streaming_sink", "append")
-    q.awaitTermination()
+    run_available_now(deduped, "events_dedup_streaming_sink", "append")
     sink = spark.table("events_dedup_streaming_sink")
     first_ts = (
         load_table(spark, sf_dir, "events")
@@ -415,9 +355,8 @@ def events_user_totals_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ensure_session_confs(spark)
     stream = read_events_stream(spark, sf_dir)
-    q = run_available_now(running_user_totals(stream),
-                          "events_user_totals_streaming_sink", "update")
-    q.awaitTermination()
+    run_available_now(running_user_totals(stream),
+                      "events_user_totals_streaming_sink", "update")
     sink = spark.table("events_user_totals_streaming_sink")
     # keep each user's LAST update = the row with the highest event count
     # (n_events is genuinely monotone per user); max_by keeps the total
@@ -497,8 +436,7 @@ def events_error_click_pairs_streaming(spark: SparkSession,
         errors, clicks, by="user_id", left_ts="error_ts",
         right_ts="click_ts", window_seconds=1800)
     out = joined.select("user_id", "error_id", "click_id")
-    q = run_available_now(out, "events_error_click_pairs_sink", "append")
-    q.awaitTermination()
+    run_available_now(out, "events_error_click_pairs_sink", "append")
     return spark.table("events_error_click_pairs_sink")
 
 
@@ -533,7 +471,6 @@ def events_hourly_append_streaming(spark: SparkSession,
     the terminal no-data batch.  Windows inside the trailing 2-hour
     watermark horizon never emit; the oracle applies the same cutoff
     (window_end <= max(ts) - 2h, Spark's eviction predicate)."""
-    import os
     import shutil
     import time
 
@@ -546,11 +483,8 @@ def events_hourly_append_streaming(spark: SparkSession,
     cut = lo.replace(minute=0, second=0, microsecond=0) + (hi - lo) / 2
     cut = cut.replace(minute=0, second=0, microsecond=0)
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    stage = f"/tmp/lsh_spark_stream_append_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_append_{tag}"
-    for d in (stage, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    stage = scratch_dir(
+        f"events_hourly_append_{os.path.basename(sf_dir.rstrip('/'))}")
     os.makedirs(stage)
     # stage each half as one file; mtime + name order early-before-late so
     # the file source replays them as two in-order micro-batches
@@ -573,7 +507,6 @@ def events_hourly_append_streaming(spark: SparkSession,
     )
     agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
     q = run_available_now(agg, "events_hourly_append_sink", "append")
-    q.awaitTermination()
     # expose per-batch state metrics so tests can pin that eviction
     # actually fired mid-stream (numRowsRemoved > 0 before the last batch)
     global LAST_APPEND_PROGRESS
@@ -611,59 +544,21 @@ def events_spikes_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame over unbounded history is not a streaming-state shape); the
     partials-then-finalize split is the standing monitor deployment:
     cheap incremental writes, one bounded read-back per report."""
-    import os
-    import shutil
-
     from ..operators.relational import spikes_from_hourly
-    from ..sources.io import _ensure_session_confs, load_table
-    from .documents import _write_batch_idempotent
 
-    _ensure_session_confs(spark)
-    ev = load_table(spark, sf_dir, "events")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = f"/tmp/lsh_spark_stream_spikes_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_spikes_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.groupBy(
+    partials = drain(
+        spark, "events_spikes_streaming", sf_dir,
+        read_events_stream(spark, sf_dir),
+        lambda batch: (
+            batch.groupBy(
                 "event_type",
                 F.date_format(F.date_trunc("hour", F.col("ts")),
                               "yyyy-MM-dd HH:mm:ss").alias("hour"))
-            .agg(F.count(F.lit(1)).cast("long").alias("__n"))
-        )
-        _write_batch_idempotent(partial, out_dir, batch_id)
-
-    with scoped_state_partitions(spark):
-        q = (stream.writeStream.foreachBatch(process)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "event_type string, hour string, n_events long, "
-            "trail_n long, trail_sum long, "
-            "ratio_to_trailing_mean double, is_spike boolean")
-    hourly = (
-        spark.read.parquet(out_dir)
-        .groupBy("event_type", "hour")
-        .agg(F.sum("__n").cast("long").alias("n_events"))
-    )
-    return spikes_from_hourly(hourly)
+            .agg(F.count(F.lit(1)).cast("long").alias("__n"))),
+        "event_type string, hour string, __n long")
+    return spikes_from_hourly(
+        partials.groupBy("event_type", "hour")
+        .agg(F.sum("__n").cast("long").alias("n_events")))
 
 
 def hll_users_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,55 +576,21 @@ def hll_users_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, deduplicated again at read-back — the piece a 100 TB
     deployment drops (that is the POINT of the sketch); the mergeable
     register maxima alone are what the monitor keeps."""
-    import os
-    import shutil
-
     from ..operators.pipeline_queries import hll_finalize, hll_rho_rows
-    from ..sources.io import _ensure_session_confs, load_table
-    from .documents import _write_batch_idempotent
 
-    _ensure_session_confs(spark)
-    ev = load_table(spark, sf_dir, "events")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out_regs = f"/tmp/lsh_spark_stream_hllu_regs_{tag}"
-    out_items = f"/tmp/lsh_spark_stream_hllu_items_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_hllu_{tag}"
-    for d in (out_regs, out_items, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    def step(batch: DataFrame):
+        rows = hll_rho_rows(batch, "event_type", "user_id")
+        return (rows.groupBy("__grp", "__idx").agg(
+                    F.max("__rho").alias("__m")),
+                rows.select("__grp", "__u", "__idx").distinct())
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        rows = hll_rho_rows(batch_df, "event_type", "user_id")
-        regs = rows.groupBy("__grp", "__idx").agg(
-            F.max("__rho").alias("__m"))
-        _write_batch_idempotent(regs, out_regs, batch_id)
-        items = rows.select("__grp", "__u", "__idx").distinct()
-        _write_batch_idempotent(items, out_items, batch_id)
-
-    with scoped_state_partitions(spark):
-        q = (stream.writeStream.foreachBatch(process)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-
-    if not os.path.isdir(out_regs) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_regs)):
-        return spark.createDataFrame(
-            [], "event_type string, n_registers long, sum_rho long, "
-            "exact_distinct long, est_distinct double")
-    m = (spark.read.parquet(out_regs)
-         .groupBy("__grp", "__idx").agg(F.max("__m").alias("__m")))
-    nd = (spark.read.parquet(out_items).select("__grp", "__u", "__idx")
-          .distinct()
+    regs, items = drain(
+        spark, "hll_users_streaming", sf_dir,
+        read_events_stream(spark, sf_dir), step,
+        ("__grp string, __idx int, __m int",
+         "__grp string, __u string, __idx int"))
+    m = regs.groupBy("__grp", "__idx").agg(F.max("__m").alias("__m"))
+    nd = (items.distinct()
           .groupBy("__grp", "__idx")
           .agg(F.countDistinct("__u").alias("__nd")))
     regs = m.join(nd, ["__grp", "__idx"])

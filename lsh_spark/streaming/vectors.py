@@ -18,17 +18,24 @@ probe + rerank.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import index as ix
-from .documents import _write_batch_idempotent
+from .drain import drain, file_stream
 
 
 def _tag(sf_dir: str) -> str:
     return os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+
+
+def _query_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The gate's query vectors (``vec_id < _N_QUERIES``) as a stream."""
+    from ..operators.pipeline_queries import _N_QUERIES
+
+    return file_stream(spark, sf_dir, "embeddings").where(
+        F.col("vec_id") < _N_QUERIES)
 
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
@@ -55,50 +62,15 @@ def ann_ivf_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the batch twin, so it carries the identical exact DuckDB oracle
     (``ANN_IVF_LLOYD_ORACLE``)."""
     from ..operators.ann import search_ivf_index
-    from ..operators.pipeline_queries import _ANN_K, _IVF_PROBE, _N_QUERIES
-    from ..sources.io import load_table
+    from ..operators.pipeline_queries import _ANN_K, _IVF_PROBE
 
     index = ensure_ivf_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    tag = _tag(sf_dir)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("vec_id") < _N_QUERIES)
-    )
-    out_dir = f"/tmp/lsh_spark_stream_ivf_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_ivf_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = search_ivf_index(spark, index, batch_df,
-                               k=_ANN_K, n_probe=_IVF_PROBE)
-        _write_batch_idempotent(res, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, "
-                "rank int")
-    return spark.read.parquet(out_dir).select(
-        "query_id", "neighbor_id", "cosine_sim", "rank")
+    return drain(
+        spark, "ann_ivf_search_streaming", sf_dir,
+        _query_stream(spark, sf_dir),
+        lambda batch: search_ivf_index(spark, index, batch,
+                                       k=_ANN_K, n_probe=_IVF_PROBE),
+        "query_id long, neighbor_id long, cosine_sim double, rank int")
 
 
 def ann_pq_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,49 +82,14 @@ def ann_pq_search_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     late-registration contract keeps earlier registry positions
     stable)."""
     from ..operators.ann import search_pq_index
-    from ..operators.pipeline_queries import _ANN_K, _N_QUERIES
-    from ..sources.io import load_table
+    from ..operators.pipeline_queries import _ANN_K
 
     index = ensure_pq_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    tag = _tag(sf_dir)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-        .where(F.col("vec_id") < _N_QUERIES)
-    )
-    out_dir = f"/tmp/lsh_spark_stream_pq_{tag}"
-    ckpt = f"/tmp/lsh_spark_ckpt_stream_pq_{tag}"
-    for d in (out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        res = search_pq_index(spark, index, batch_df, k=_ANN_K)
-        _write_batch_idempotent(res, out_dir, batch_id)
-
-    from .events import scoped_state_partitions
-
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not os.path.isdir(out_dir) or not any(
-            f.startswith("batch_id=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, approx_dist double, "
-                "rank int")
-    return spark.read.parquet(out_dir).select(
-        "query_id", "neighbor_id", "approx_dist", "rank")
+    return drain(
+        spark, "ann_pq_search_streaming", sf_dir,
+        _query_stream(spark, sf_dir),
+        lambda batch: search_pq_index(spark, index, batch, k=_ANN_K),
+        "query_id long, neighbor_id long, approx_dist double, rank int")
 
 
 def _oracle() -> str:

@@ -365,12 +365,20 @@ def test_ivf_pq_index_lifecycle(spark):
         grown = ann.search_ivf_pq_index(spark, name2, queries, k=40,
                                         n_probe=3).collect()
         assert 40 in {r.neighbor_id for r in grown}
+
+        # compaction folds the tombstones out of the codes: _deletes is
+        # gone and searches return the same rows
+        ann.compact_ivf_pq_index(spark, name)
+        assert not spark.catalog.tableExists(f"{name}_deletes")
+        compacted = sorted(map(tuple, ann.search_ivf_pq_index(
+            spark, name, queries, k=40, n_probe=3).collect()))
+        assert compacted == sorted(map(tuple, live))
     finally:
         from lsh_spark.sources.formats import drop_table_and_files
 
         for nm in (name, f"{name}b"):
-            for sfx in ("_codes", "_centroids", "_codebooks", "_meta",
-                        "_deletes"):
+            for sfx in ("_codes", "_codes_v1", "_centroids", "_codebooks",
+                        "_meta", "_deletes"):
                 drop_table_and_files(spark, f"{nm}{sfx}")
 
 

@@ -11,11 +11,14 @@ def test_events_ts_decode_pinned(spark):
     from pyspark.sql.types import TimestampType
 
     from lsh_spark.sources.io import load_table
-    from lsh_spark.streaming.events import read_events_stream
+    from lsh_spark.streaming.drain import file_stream
+    from lsh_spark.streaming.events import EVENTS_SCHEMA, read_events_stream
 
     sf_dir = "/root/testdata/sf0.001"
     ev = load_table(spark, sf_dir, "events")
     assert isinstance(ev.schema["ts"].dataType, TimestampType)
+    # the stream reads the schema the file stores, before the ts cast
+    assert file_stream(spark, sf_dir, "events").schema == EVENTS_SCHEMA
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     # the generator writes 2024-dated events; a unit bug lands in 1970
     # (nanos read as micros) or year ~56k (micros read as nanos)

@@ -149,12 +149,9 @@ def test_streaming_dedup_and_udf(spark):
 
 
 def test_streaming_near_dup_foreachbatch(spark, tmp_path):
-    import shutil
-
     from lsh_spark.sources.io import load_table
     from lsh_spark.streaming.events import streaming_near_dup_against_corpus
 
-    shutil.rmtree("/tmp/lsh_spark_ckpt_stream_matches", ignore_errors=True)
     corpus = load_table(spark, SF_DIR, "documents").where("doc_id >= 250")
     # stream the first 250 docs in as files
     incoming = load_table(spark, SF_DIR, "documents").where("doc_id < 250")
@@ -171,7 +168,49 @@ def test_streaming_near_dup_foreachbatch(spark, tmp_path):
     assert set(got.columns) == {"doc_id_left", "doc_id_right", "jaccard"}
     # every match pairs an incoming doc (<250) with a corpus doc (>=250)
     assert got.where("doc_id_left >= 250 OR doc_id_right < 250").count() == 0
+    # a second call with the same sink table starts from a fresh
+    # checkpoint: a stale one would mark the input done and run no batch
+    q = streaming_near_dup_against_corpus(
+        stream, corpus, "stream_matches", threshold=0.6)
+    q.awaitTermination(180)
+    assert spark.table("stream_matches").count() == n
     spark.sql("DROP TABLE IF EXISTS stream_matches")
+
+
+def test_drain_empty_stream_returns_declared_schema(spark):
+    """A drain whose stream passes no rows runs no step, and its result
+    is an empty frame of exactly the declared schema."""
+    from lsh_spark.streaming.drain import drain, file_stream
+
+    stream = file_stream(spark, SF_DIR, "documents").where(
+        F.col("doc_id") < 0)
+    out = drain(
+        spark, "empty_drain_probe", SF_DIR, stream,
+        lambda batch: batch.select(
+            "doc_id", F.length("text").alias("n_chars"),
+            F.lit(0.5).alias("score")),
+        "doc_id long, n_chars int, score double")
+    assert out.count() == 0
+    assert out.dtypes == [("doc_id", "bigint"), ("n_chars", "int"),
+                          ("score", "double")]
+
+
+def test_scratch_root_removed_at_exit():
+    """The per-process streaming scratch root is removed when the
+    interpreter exits."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    root = subprocess.run(
+        [sys.executable, "-c",
+         "from lsh_spark.streaming.drain import scratch_root; "
+         "print(scratch_root())"],
+        cwd=repo, capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert os.path.basename(root).startswith("lsh_spark_stream_")
+    assert not os.path.exists(root)
 
 
 def test_multimodal_resize_and_frames(spark):
