@@ -1,6 +1,6 @@
 """Arrow-batch kernels: whole-batch vectorized forms of the core pipelines.
 
-These are what the pandas UDFs call — one invocation per Arrow record batch
+These are what the Arrow UDFs call — one invocation per Arrow record batch
 (the Spark analog of the reference's per-DataChunk kernel invocation,
 ``src/minhash.rs:154-161``).  Rather than looping rows in Python, documents
 are flattened into one code-point array and every char-ngram window in the
@@ -371,6 +371,18 @@ def sorted_intersect_counts(ka: np.ndarray, kb: np.ndarray,
     hits = m[1:][dup]
     shift = np.uint64(32) if m.dtype == np.uint64 else 32
     return np.bincount((hits >> shift).astype(np.int64), minlength=n_rows)
+
+
+def segment_intersect_counts(va: np.ndarray, la: np.ndarray,
+                             vb: np.ndarray, lb: np.ndarray) -> np.ndarray:
+    """Per-row |A_i ∩ B_i| of two aligned batches of unique int32 sets,
+    each given flat (values, per-row lengths): every value is tagged
+    with its row index in the high 32 bits, so ONE
+    ``sorted_intersect_counts`` merge counts every row's overlap."""
+    rows = np.arange(la.shape[0], dtype=np.int64)
+    ka = (np.repeat(rows, la) << 32) | (va.astype(np.int64) & 0xFFFFFFFF)
+    kb = (np.repeat(rows, lb) << 32) | (vb.astype(np.int64) & 0xFFFFFFFF)
+    return sorted_intersect_counts(ka, kb, la.shape[0])
 
 
 _POP8 = np.unpackbits(

@@ -1,4 +1,4 @@
-"""The five reference LSH functions as Arrow-vectorized pandas UDF factories.
+"""The five reference LSH functions as Arrow UDF factories.
 
 Reference surface (``src/lib.rs:41-52``): ``lsh_min``, ``lsh_min32``,
 ``lsh_jaccard``, ``lsh_euclidean``, ``lsh_euclidean32``.  Each factory here
@@ -25,74 +25,128 @@ collapse/reorder them (SURVEY.md §4).
 
 from __future__ import annotations
 
-from decimal import Decimal
-
 import numpy as np
-import pandas as pd
+# module-level: arrow_udf infers the UDF kind from the ``pa.Array`` type
+# hints, which ``from __future__ import annotations`` leaves as strings
+# resolved against this module's globals (a function-local import fails
+# with UNSUPPORTED_SIGNATURE)
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     ArrayType,
     DecimalType,
     DoubleType,
+    IntegerType,
     LongType,
+    StructField,
+    StructType,
 )
 
 from .._core.batch import (
     jaccard_pairs_batch,
-    minhash_shingles_batch,
+    minhash_from_window_hashes,
     minhash_text_batch,
+    segment_intersect_counts,
 )
 from .._core.euclidean import euclidean_bands_batch
 
 _DEC_ARRAY = ArrayType(DecimalType(20, 0))
 _LONG_ARRAY = ArrayType(LongType())
+_INT_ARRAY = ArrayType(IntegerType())
 
 
-def _u64_rows_to_decimal(mat: np.ndarray, mask: np.ndarray) -> pd.Series:
-    """(n, bands) uint64 + validity mask → Series of list[Decimal] / None."""
-    out = [
-        [Decimal(int(v)) for v in row] if ok else None
-        for row, ok in zip(mat, mask)
-    ]
-    return pd.Series(out, dtype=object)
+# --- the Arrow boundary ----------------------------------------------------
+#
+# Every list-column kernel crosses the Python boundary through these two
+# helpers: Arrow ``list`` arrays are (offsets, flat values) already, so a
+# batch goes in and out as whole numpy arrays, never as per-row Python
+# objects (boxing each row was the largest Python cost of the set pass).
+
+def _validity(arr) -> np.ndarray:
+    """Per-row valid mask of an Arrow array (True = not NULL)."""
+    if arr.null_count == 0:
+        return np.ones(len(arr), dtype=bool)
+    return arr.is_valid().to_numpy(zero_copy_only=False)
 
 
-def _u64_rows_to_long(mat: np.ndarray, mask: np.ndarray, low32: bool) -> pd.Series:
-    if low32:
-        vals = (mat & np.uint64(0xFFFFFFFF)).astype(np.int64)
-    else:
-        vals = mat.view(np.int64)  # two's complement reinterpretation
-    out = [row.tolist() if ok else None for row, ok in zip(vals, mask)]
-    return pd.Series(out, dtype=object)
+def _to_arrow_list(values, offsets, validity) -> pa.ListArray:
+    """(flat values, row offsets of length n+1, valid mask) → Arrow list
+    array; rows where ``validity`` is False are NULL.
+
+    ``offsets=None`` with a 2-D ``values`` matrix makes one fixed-width
+    row per matrix row (the band matrices).  uint64 values go out as
+    ``decimal128(20,0)`` — the reference's UBIGINT surface — built as
+    the little-endian 128-bit word pair ``[value, 0]``, with no
+    per-value Python ``Decimal``."""
+    if offsets is None:
+        n, k = values.shape
+        offsets = np.arange(n + 1, dtype=np.int64) * k
+        values = values.reshape(-1)
+    if values.dtype == np.uint64:
+        words = np.zeros((values.shape[0], 2), dtype="<u8")
+        words[:, 0] = values
+        values = pa.Array.from_buffers(pa.decimal128(20, 0), values.shape[0],
+                                       [None, pa.py_buffer(words)])
+    mask = None if validity.all() else pa.array(~validity)
+    return pa.ListArray.from_arrays(
+        pa.array(np.asarray(offsets, dtype=np.int32)), values, mask=mask)
 
 
-def _valid_text_mask(s: pd.Series) -> np.ndarray:
-    return s.notna().to_numpy()
+def _from_arrow_list(arr):
+    """Arrow list array (or chunked array) → (flat values, int64 row
+    offsets of length n+1 starting at 0, valid mask).  NULL rows are empty
+    segments; a sliced or chunked input is rebased (its first offset may
+    be non-zero)."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy(
+        zero_copy_only=False)
+    offsets = np.zeros(len(arr) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    # flatten() drops NULL rows' child values and honours the slice
+    return (arr.flatten().to_numpy(zero_copy_only=False), offsets,
+            _validity(arr))
 
 
-def _minhash_text_mat(s: pd.Series, width, bc, bs, seed):
-    mask = _valid_text_mask(s)
-    texts = ["" if not ok else t for t, ok in zip(s, mask)]
-    mat = minhash_text_batch(texts, width, bc, bs, seed)
-    return mat, mask
+def _u64_list(mat: np.ndarray, mask: np.ndarray, form: str) -> pa.ListArray:
+    """(n, bands) uint64 band matrix → list rows: ``"decimal"`` (u64 as
+    DECIMAL(20,0)), ``"long"`` (two's-complement int64) or ``"low32"``
+    (the low 32 bits, ``lsh_min32``)."""
+    if form == "long":
+        mat = mat.view(np.int64)
+    elif form == "low32":
+        mat = (mat & np.uint64(0xFFFFFFFF)).astype(np.int64)
+    return _to_arrow_list(mat, None, mask)
 
 
-def _minhash_shingle_mat(s: pd.Series, bc, bs, seed):
-    mask = np.array([v is not None and not (isinstance(v, float)) for v in s],
-                    dtype=bool)
-    lists = [list(v) if ok else [] for v, ok in zip(s, mask)]
-    mat = minhash_shingles_batch(lists, bc, bs, seed)
-    return mat, mask
+def _texts(s: pa.Array):
+    """String batch → (Python strings, None for NULL; valid mask)."""
+    return s.to_pylist(), _validity(s)
+
+
+def _minhash_text_mat(s: pa.Array, width, bc, bs, seed):
+    texts, mask = _texts(s)
+    return minhash_text_batch(texts, width, bc, bs, seed), mask
+
+
+def _minhash_shingle_mat(s: pa.Array, bc, bs, seed):
+    from .._core.batch import hash_strings_batch
+
+    flat, offs, mask = _from_arrow_list(s)
+    hashes = (hash_strings_batch(flat) if flat.shape[0]
+              else np.empty(0, dtype=np.uint64))
+    return minhash_from_window_hashes(hashes, offs, bc, bs, seed), mask
 
 
 def lsh_min(col, ngram_width: int, band_count: int, band_size: int, seed: int) -> Column:
     """``lsh_min(VARCHAR, ...) -> LIST(UBIGINT)`` (``src/minhash.rs:23-83``)."""
 
-    @pandas_udf(_DEC_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_DEC_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _minhash_text_mat(s, ngram_width, band_count, band_size, seed)
-        return _u64_rows_to_decimal(mat, mask)
+        return _u64_list(mat, mask, "decimal")
 
     return _udf(col)
 
@@ -100,10 +154,10 @@ def lsh_min(col, ngram_width: int, band_count: int, band_size: int, seed: int) -
 def lsh_min32(col, ngram_width: int, band_count: int, band_size: int, seed: int) -> Column:
     """``lsh_min32``: exactly the low 32 bits of ``lsh_min`` (``src/lib.rs:23-27``)."""
 
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _minhash_text_mat(s, ngram_width, band_count, band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=True)
+        return _u64_list(mat, mask, "low32")
 
     return _udf(col)
 
@@ -111,21 +165,29 @@ def lsh_min32(col, ngram_width: int, band_count: int, band_size: int, seed: int)
 def lsh_min_shingles(col, band_count: int, band_size: int, seed: int) -> Column:
     """``lsh_min(LIST(VARCHAR), ...)`` overload (``src/minhash.rs:85-150``)."""
 
-    @pandas_udf(_DEC_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_DEC_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _minhash_shingle_mat(s, band_count, band_size, seed)
-        return _u64_rows_to_decimal(mat, mask)
+        return _u64_list(mat, mask, "decimal")
 
     return _udf(col)
 
 
 def lsh_min32_shingles(col, band_count: int, band_size: int, seed: int) -> Column:
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _minhash_shingle_mat(s, band_count, band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=True)
+        return _u64_list(mat, mask, "low32")
 
     return _udf(col)
+
+
+def _jaccard_texts(a: pa.Array, b: pa.Array, ngram_width: int) -> pa.Array:
+    """Exact Jaccard of aligned text batches; NULL where either is NULL."""
+    ta, ma = _texts(a)
+    tb, mb = _texts(b)
+    mask = ma & mb
+    return pa.array(jaccard_pairs_batch(ta, tb, ngram_width), mask=~mask)
 
 
 def lsh_jaccard(col_a, col_b, ngram_width: int) -> Column:
@@ -133,31 +195,23 @@ def lsh_jaccard(col_a, col_b, ngram_width: int) -> Column:
 
     0.0 if either set is empty; NULL if either input is NULL."""
 
-    @pandas_udf(DoubleType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        mask = a.notna().to_numpy() & b.notna().to_numpy()
-        ta = ["" if not ok else v for v, ok in zip(a, mask)]
-        tb = ["" if not ok else v for v, ok in zip(b, mask)]
-        vals = jaccard_pairs_batch(ta, tb, ngram_width)
-        out = pd.Series(vals)
-        out[~mask] = None
-        return out
+    @arrow_udf(DoubleType())
+    def _udf(a: pa.Array, b: pa.Array) -> pa.Array:
+        return _jaccard_texts(a, b, ngram_width)
 
     return _udf(col_a, col_b)
 
 
-def _euclidean_mat(s: pd.Series, bucket_width, bc, bs, seed):
-    mask = np.array([v is not None and not (isinstance(v, float) and np.isnan(v))
-                     for v in s], dtype=bool)
-    arrays = [np.asarray(v, dtype=np.float64) for v, ok in zip(s, mask) if ok]
+def _euclidean_mat(s: pa.Array, bucket_width, bc, bs, seed):
+    flat, offs, mask = _from_arrow_list(s)
     n = len(s)
-    if not arrays:
+    lens = (offs[1:] - offs[:-1])[mask]
+    if not lens.shape[0]:
         return np.zeros((n, bc), dtype=np.uint64), mask
-    dims = {a.shape[0] for a in arrays}
-    if len(dims) != 1:
+    if (lens != lens[0]).any():
         # mirrors src/euclidean_hash.rs:41
         raise ValueError("All input arrays must have the same length")
-    xs = np.stack(arrays)
+    xs = flat.astype(np.float64, copy=False).reshape(lens.shape[0], lens[0])
     sub = euclidean_bands_batch(xs, bucket_width, bc, bs, seed)
     mat = np.zeros((n, bc), dtype=np.uint64)
     mat[mask] = sub
@@ -168,20 +222,20 @@ def lsh_euclidean(col, bucket_width: float, band_count: int, band_size: int,
                   seed: int) -> Column:
     """``lsh_euclidean(LIST(DOUBLE), ...)`` (``src/euclidean_hash.rs:20-98``)."""
 
-    @pandas_udf(_DEC_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_DEC_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _euclidean_mat(s, bucket_width, band_count, band_size, seed)
-        return _u64_rows_to_decimal(mat, mask)
+        return _u64_list(mat, mask, "decimal")
 
     return _udf(col)
 
 
 def lsh_euclidean32(col, bucket_width: float, band_count: int, band_size: int,
                     seed: int) -> Column:
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _euclidean_mat(s, bucket_width, band_count, band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=True)
+        return _u64_list(mat, mask, "low32")
 
     return _udf(col)
 
@@ -193,10 +247,10 @@ def lsh_min_bands_long(col, ngram_width: int, band_count: int, band_size: int,
     """u64 band hashes reinterpreted as int64 — the cheap representation for
     band-equality blocking joins (no Decimal boxing)."""
 
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _minhash_text_mat(s, ngram_width, band_count, band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=False)
+        return _u64_list(mat, mask, "long")
 
     return _udf(col)
 
@@ -206,10 +260,10 @@ def lsh_min_shingles_bands_long(col, band_count: int, band_size: int,
     """LIST(VARCHAR)-overload band hashes as int64 (two's complement) — the
     join/compare representation of ``lsh_min_shingles``."""
 
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _minhash_shingle_mat(s, band_count, band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=False)
+        return _u64_list(mat, mask, "long")
 
     return _udf(col)
 
@@ -231,30 +285,25 @@ def weighted_minhash_bands_long(col, band_count: int, band_size: int,
     no composed-string materialization (bit-identical — pinned against
     the ``_replicated_shingles`` string mirror — and measured ~6x on
     the kernel)."""
-    from .._core.batch import (
-        minhash_from_window_hashes,
-        tokenize_words,
-        weighted_occurrence_hashes,
-    )
+    from .._core.batch import tokenize_words, weighted_occurrence_hashes
 
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
-        mask = s.notna().to_numpy()
-        hashes, offs = weighted_occurrence_hashes(
-            tokenize_words(["" if not ok else t for t, ok in zip(s, mask)]))
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
+        texts, mask = _texts(s)
+        hashes, offs = weighted_occurrence_hashes(tokenize_words(texts))
         mat = minhash_from_window_hashes(hashes, offs, band_count,
                                          band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=False)
+        return _u64_list(mat, mask, "long")
 
     return _udf(col)
 
 
 def lsh_euclidean_bands_long(col, bucket_width: float, band_count: int,
                              band_size: int, seed: int) -> Column:
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
         mat, mask = _euclidean_mat(s, bucket_width, band_count, band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=False)
+        return _u64_list(mat, mask, "long")
 
     return _udf(col)
 
@@ -312,33 +361,22 @@ def _shingle_hashes(texts, shingle: str, width: int):
 _SHINGLE_MODES = ("char", "word", "weighted", "weighted_word")
 
 
-def _sorted_sets(s: pd.Series, shingle: str, width: int):
+def _sorted_sets(s: pa.Array, shingle: str, width: int):
     """Text batch → (flat sorted-unique int32 values, row bounds, valid
     mask); NULL rows get empty segments."""
     from .._core.batch import segment_unique_int32
 
-    mask = s.notna().to_numpy()
-    hashes, offs = _shingle_hashes(
-        ["" if not ok else t for t, ok in zip(s, mask)], shingle, width)
+    texts, mask = _texts(s)
+    hashes, offs = _shingle_hashes(texts, shingle, width)
     vals, bounds = segment_unique_int32(
         hashes.astype(np.uint32).view(np.int32), offs)
     return vals, bounds, mask
 
 
-def _set_rows(vals: np.ndarray, bounds: np.ndarray, mask) -> pd.Series:
-    """Per-row int32 ndarray views (never Python lists — per-element
-    boxing was the measured hot spot: 2.4x at the 5000-doc batch shape);
-    masked rows yield None."""
-    return pd.Series([vals[bounds[i]:bounds[i + 1]] if ok else None
-                      for i, ok in enumerate(mask)], dtype=object)
-
-
 def _set_col(col, shingle: str, width: int) -> Column:
-    from pyspark.sql.types import IntegerType
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def _udf(s: pd.Series) -> pd.Series:
-        return _set_rows(*_sorted_sets(s, shingle, width))
+    @arrow_udf(_INT_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
+        return _to_arrow_list(*_sorted_sets(s, shingle, width))
 
     return _udf(col)
 
@@ -372,29 +410,25 @@ def shingle_set_bands_col(col, shingle: str, ngram_width: int,
     concatenate in seed order, so element ``rot * band_count + i`` is
     band ``i`` of rotation ``rot`` — the fused ``band_idx`` of the
     seed-rotation join.  NULL text → NULL set and bands."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    from .._core.batch import minhash_from_window_hashes
-
     if shingle not in _SHINGLE_MODES:
         # a typo silently falling back to char shingles would return a
         # materially different retention set at the caller's threshold
         raise ValueError(
             f"unknown shingle mode {shingle!r}: expected 'char', 'word', "
             "'weighted' or 'weighted_word'")
-    out_type = StructType([StructField("set", ArrayType(IntegerType())),
+    out_type = StructType([StructField("set", _INT_ARRAY),
                            StructField("bands", _LONG_ARRAY)])
 
-    @pandas_udf(out_type)
-    def _udf(s: pd.Series) -> pd.DataFrame:
+    @arrow_udf(out_type)
+    def _udf(s: pa.Array) -> pa.Array:
         vals, bounds, mask = _sorted_sets(s, shingle, ngram_width)
         u = vals.view(np.uint32).astype(np.uint64)
         mat = np.hstack([
             minhash_from_window_hashes(u, bounds, band_count, band_size, sd)
             for sd in seeds])
-        return pd.DataFrame({
-            "set": _set_rows(vals, bounds, mask),
-            "bands": _u64_rows_to_long(mat, mask, low32=False)})
+        return pa.StructArray.from_arrays(
+            [_to_arrow_list(vals, bounds, mask), _u64_list(mat, mask, "long")],
+            names=["set", "bands"])
 
     return _udf(col)
 
@@ -420,33 +454,23 @@ def _replicated_shingles(toks: "list[list[str]]") -> "list[list[str]]":
     return out
 
 
-def _set_series_flat(s: pd.Series):
+def _set_hashes(s: pa.Array):
     """Set-column batch → (flat u32 values as uint64, row offsets, valid
-    mask).  Same null idiom as ``_minhash_shingle_mat``: some
-    Arrow/pandas versions deliver array nulls as float NaN, not None."""
-    mask = np.array([v is not None and not isinstance(v, float) for v in s],
-                    dtype=bool)
-    lens = np.array([len(v) if ok else 0 for v, ok in zip(s, mask)],
-                    dtype=np.int64)
-    offs = np.zeros(len(s) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    flat = (np.concatenate([np.asarray(v, dtype=np.int32) for v, ok
-                            in zip(s, mask) if ok and len(v)])
-            .view(np.uint32).astype(np.uint64)
-            if lens.sum() else np.empty(0, dtype=np.uint64))
-    return flat, offs, mask
+    mask)."""
+    flat, offs, mask = _from_arrow_list(s)
+    return (flat.astype(np.int32, copy=False).view(np.uint32)
+            .astype(np.uint64)), offs, mask
 
 
 def minhash_bands_from_set(col, band_count: int, band_size: int, seed: int) -> Column:
     """Banded MinHash (int64 band hashes) computed from a materialized
     shingle-set column (output of :func:`shingle_set_col`)."""
-    from .._core.batch import minhash_from_window_hashes
 
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
-        flat, offs, mask = _set_series_flat(s)
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
+        flat, offs, mask = _set_hashes(s)
         mat = minhash_from_window_hashes(flat, offs, band_count, band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=False)
+        return _u64_list(mat, mask, "long")
 
     return _udf(col)
 
@@ -465,56 +489,35 @@ def lsh_min_minima_long_from_set(col, band_count: int, band_size: int,
     re-shingling the corpus."""
     from .._core.batch import seed_minima_from_window_hashes
 
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
-        flat, offs, mask = _set_series_flat(s)
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
+        flat, offs, mask = _set_hashes(s)
         mat = seed_minima_from_window_hashes(flat, offs, band_count,
                                              band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=False)
+        return _u64_list(mat, mask, "long")
 
     return _udf(col)
 
 
 def jaccard_from_sets(col_a, col_b) -> Column:
-    """Exact Jaccard between two materialized shingle-set columns."""
+    """Exact Jaccard between two materialized shingle-set columns; 0.0
+    when either set is empty, NULL when either is NULL."""
 
-    @pandas_udf(DoubleType())
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        # Vectorized batch intersection — no per-row Python/numpy calls:
-        # tag every set value with its row index in the high 32 bits, then
-        # ONE intersect1d over the whole Arrow batch counts every row's
-        # |A∩B| at once.  Measured on the sf0.1 verification workload
-        # (5.2M candidate pairs, ~300-element sets): 24 s vs 88 s for
-        # Catalyst array_intersect and 69 s for per-row np.intersect1d —
-        # the per-row paths pay per-call overhead ~55 µs that the batch
-        # merge amortizes away.
-        n = len(a)
-        out = np.full(n, np.nan)
-        va, vb, idx = [], [], []
-        for i, (sa, sb) in enumerate(zip(a, b)):
-            if sa is None or sb is None:
-                continue
-            if len(sa) == 0 or len(sb) == 0:
-                out[i] = 0.0
-                continue
-            va.append(np.asarray(sa, dtype=np.int64))
-            vb.append(np.asarray(sb, dtype=np.int64))
-            idx.append(i)
-        if idx:
-            la = np.fromiter((x.shape[0] for x in va), dtype=np.int64,
-                             count=len(va))
-            lb = np.fromiter((x.shape[0] for x in vb), dtype=np.int64,
-                             count=len(vb))
-            rows = np.arange(len(idx), dtype=np.int64)
-            ka = (np.repeat(rows, la) << 32) | (np.concatenate(va) & 0xFFFFFFFF)
-            kb = (np.repeat(rows, lb) << 32) | (np.concatenate(vb) & 0xFFFFFFFF)
-            inter = np.intersect1d(ka, kb, assume_unique=True)
-            ni = np.bincount(inter >> 32, minlength=len(idx))
-            union = la + lb - ni
-            out[np.asarray(idx)] = np.where(union > 0,
-                                            ni / np.maximum(union, 1), 0.0)
-        res = pd.Series(out)
-        return res.where(pd.notna(res), None)
+    @arrow_udf(DoubleType())
+    def _udf(a: pa.Array, b: pa.Array) -> pa.Array:
+        # one row-tagged merge over the whole Arrow batch counts every
+        # row's |A∩B| at once (``segment_intersect_counts``).  Measured
+        # on the sf0.1 verification workload (5.2M candidate pairs,
+        # ~300-element sets): 24 s vs 88 s for Catalyst array_intersect
+        # and 69 s for per-row np.intersect1d — the per-row paths pay
+        # per-call overhead ~55 µs that the batch merge amortizes away.
+        fa, oa, ma = _from_arrow_list(a)
+        fb, ob, mb = _from_arrow_list(b)
+        la, lb = oa[1:] - oa[:-1], ob[1:] - ob[:-1]
+        ni = segment_intersect_counts(fa, la, fb, lb)
+        j = np.where((la > 0) & (lb > 0),
+                     ni / np.maximum(la + lb - ni, 1), 0.0)
+        return pa.array(j, mask=~(ma & mb))
 
     return _udf(col_a, col_b)
 
@@ -528,12 +531,11 @@ def lsh_min_minima_long(col, ngram_width: int, band_count: int,
     minhash_text_minima_batch``)."""
     from .._core.batch import minhash_text_minima_batch
 
-    @pandas_udf(_LONG_ARRAY)
-    def _udf(s: pd.Series) -> pd.Series:
-        mask = _valid_text_mask(s)
-        texts = ["" if not ok else t for t, ok in zip(s, mask)]
+    @arrow_udf(_LONG_ARRAY)
+    def _udf(s: pa.Array) -> pa.Array:
+        texts, mask = _texts(s)
         mat = minhash_text_minima_batch(texts, ngram_width, band_count,
                                         band_size, seed)
-        return _u64_rows_to_long(mat, mask, low32=False)
+        return _u64_list(mat, mask, "long")
 
     return _udf(col)

@@ -15,51 +15,43 @@ message otherwise (``src/lib.rs:29-38``:
 
 from __future__ import annotations
 
-from decimal import Decimal
-
-import numpy as np
-import pandas as pd
+# module-level: arrow_udf resolves the ``pa.Array`` hints by name
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, DecimalType, DoubleType, LongType
 
-from .._core.batch import (
-    jaccard_pairs_batch,
-    minhash_shingles_batch,
-    minhash_text_batch,
-)
 from .lsh import (
     _euclidean_mat,
+    _jaccard_texts,
     _minhash_shingle_mat,
     _minhash_text_mat,
-    _u64_rows_to_decimal,
-    _u64_rows_to_long,
+    _u64_list,
 )
 
 _DEC_ARRAY = ArrayType(DecimalType(20, 0))
 _LONG_ARRAY = ArrayType(LongType())
 
 
-def _const(s: pd.Series, name: str):
-    vals = s.unique()
+def _const(arr: pa.Array, name: str):
+    vals = arr.unique()
     if len(vals) > 1:
         raise ValueError(f"{name} must be a constant value, not vary per row")
-    return vals[0]
+    return vals[0].as_py()
 
 
 def _make_min_sql(low32: bool):
     ret = _LONG_ARRAY if low32 else _DEC_ARRAY
 
-    @pandas_udf(ret)
-    def _udf(text: pd.Series, w: pd.Series, bc: pd.Series, bs: pd.Series,
-             seed: pd.Series) -> pd.Series:
+    @arrow_udf(ret)
+    def _udf(text: pa.Array, w: pa.Array, bc: pa.Array, bs: pa.Array,
+             seed: pa.Array) -> pa.Array:
         width = int(_const(w, "ngram_width"))
         band_count = int(_const(bc, "band_count"))
         band_size = int(_const(bs, "band_size"))
         sd = int(_const(seed, "seed"))
         mat, mask = _minhash_text_mat(text, width, band_count, band_size, sd)
-        return (_u64_rows_to_long(mat, mask, low32=True) if low32
-                else _u64_rows_to_decimal(mat, mask))
+        return _u64_list(mat, mask, "low32" if low32 else "decimal")
 
     return _udf
 
@@ -67,44 +59,35 @@ def _make_min_sql(low32: bool):
 def _make_min_shingles_sql(low32: bool):
     ret = _LONG_ARRAY if low32 else _DEC_ARRAY
 
-    @pandas_udf(ret)
-    def _udf(shingles: pd.Series, bc: pd.Series, bs: pd.Series,
-             seed: pd.Series) -> pd.Series:
+    @arrow_udf(ret)
+    def _udf(shingles: pa.Array, bc: pa.Array, bs: pa.Array,
+             seed: pa.Array) -> pa.Array:
         band_count = int(_const(bc, "band_count"))
         band_size = int(_const(bs, "band_size"))
         sd = int(_const(seed, "seed"))
         mat, mask = _minhash_shingle_mat(shingles, band_count, band_size, sd)
-        return (_u64_rows_to_long(mat, mask, low32=True) if low32
-                else _u64_rows_to_decimal(mat, mask))
+        return _u64_list(mat, mask, "low32" if low32 else "decimal")
 
     return _udf
 
 
-@pandas_udf(DoubleType())
-def _jaccard_sql(a: pd.Series, b: pd.Series, w: pd.Series) -> pd.Series:
-    width = int(_const(w, "ngram_width"))
-    mask = a.notna().to_numpy() & b.notna().to_numpy()
-    ta = ["" if not ok else v for v, ok in zip(a, mask)]
-    tb = ["" if not ok else v for v, ok in zip(b, mask)]
-    vals = jaccard_pairs_batch(ta, tb, width)
-    out = pd.Series(vals)
-    out[~mask] = None
-    return out
+@arrow_udf(DoubleType())
+def _jaccard_sql(a: pa.Array, b: pa.Array, w: pa.Array) -> pa.Array:
+    return _jaccard_texts(a, b, int(_const(w, "ngram_width")))
 
 
 def _make_euclidean_sql(low32: bool):
     ret = _LONG_ARRAY if low32 else _DEC_ARRAY
 
-    @pandas_udf(ret)
-    def _udf(arr: pd.Series, bw: pd.Series, bc: pd.Series, bs: pd.Series,
-             seed: pd.Series) -> pd.Series:
+    @arrow_udf(ret)
+    def _udf(arr: pa.Array, bw: pa.Array, bc: pa.Array, bs: pa.Array,
+             seed: pa.Array) -> pa.Array:
         bucket_width = float(_const(bw, "bucket_width"))
         band_count = int(_const(bc, "band_count"))
         band_size = int(_const(bs, "band_size"))
         sd = int(_const(seed, "seed"))
         mat, mask = _euclidean_mat(arr, bucket_width, band_count, band_size, sd)
-        return (_u64_rows_to_long(mat, mask, low32=True) if low32
-                else _u64_rows_to_decimal(mat, mask))
+        return _u64_list(mat, mask, "low32" if low32 else "decimal")
 
     return _udf
 

@@ -42,63 +42,50 @@ from ..sources import index as ix
 
 # Exact-Jaccard verification (the reference's set ratio,
 # ``shingleset.rs:50-57``: 0.0 when either side is empty) runs as ONE
-# mapInPandas pass: a vectorized numpy batch-merge (values row-tagged in
+# mapInArrow pass: a vectorized numpy batch-merge (values row-tagged in
 # the high 32 bits, one radix-stable merge per Arrow batch — see
-# ``_core.batch.sorted_intersect_counts``) that filters and
+# ``_core.batch.segment_intersect_counts``) that filters and
 # projects in the same pass.  Measured on the sf0.1 flagship workload
 # (5.2M pairs): the batch merge is 3.6× faster than Catalyst
 # ``array_intersect`` (per-row hash-set builds cost ~55 µs/pair), and the
 # single pass avoids the double UDF evaluation Catalyst's predicate
 # pushdown creates when a filter references a projected UDF column.
+# Kernels read the id and set columns as Arrow offsets/values
+# (``functions.lsh._from_arrow_list``) and emit Arrow record batches.
 
 
-def _batch_jaccard(va: list, vb: list) -> "np.ndarray":
-    """|A∩B|/|A∪B| for aligned lists of sorted-unique int32 arrays — one
-    vectorized merge for the whole batch.  The row-tagged concatenations
-    are globally sorted by construction, so the overlap count is one
-    radix-stable merge (``sorted_intersect_counts``), not a comparison
-    sort."""
+def _batch_jaccard(va, oa, vb, ob) -> "np.ndarray":
+    """|A∩B|/|A∪B| for two aligned batches of sorted-unique int32 sets,
+    each given as flat values + row offsets — one vectorized merge for
+    the whole batch."""
     import numpy as np
 
-    from .._core.batch import sorted_intersect_counts
+    from .._core.batch import segment_intersect_counts
 
-    la = np.fromiter((len(x) for x in va), dtype=np.int64, count=len(va))
-    lb = np.fromiter((len(x) for x in vb), dtype=np.int64, count=len(vb))
-    rows = np.arange(len(va), dtype=np.int64)
-    ka = (np.repeat(rows, la) << 32) | (
-        np.concatenate(va).astype(np.int64) & 0xFFFFFFFF
-        if la.sum() else np.empty(0, dtype=np.int64))
-    kb = (np.repeat(rows, lb) << 32) | (
-        np.concatenate(vb).astype(np.int64) & 0xFFFFFFFF
-        if lb.sum() else np.empty(0, dtype=np.int64))
-    ni = sorted_intersect_counts(ka, kb, len(va))
+    la, lb = oa[1:] - oa[:-1], ob[1:] - ob[:-1]
+    ni = segment_intersect_counts(va, la, vb, lb)
     union = la + lb - ni
     return np.where(union > 0, ni / np.maximum(union, 1), 0.0)
 
 
-def _batch_containment(va: list, vb: list):
-    """Per-row (|A∩B|/|A|, |A∩B|/|B|) for aligned lists of sorted-unique
-    int32 arrays — the same one-merge-per-batch shape as
-    ``_batch_jaccard``; raw IEEE divisions (no rounding here: numpy
-    rounds half-even, the engines round half-up — rounding happens
-    in-plan with ``F.round`` so both engines replay one op order)."""
+def _batch_containment(va, oa, vb, ob):
+    """Per-row (|A∩B|/|A|, |A∩B|/|B|) for two aligned batches of
+    sorted-unique int32 sets (flat values + row offsets) — the same
+    one-merge-per-batch shape as ``_batch_jaccard``; raw IEEE divisions
+    (no rounding here: numpy rounds half-even, the engines round
+    half-up — rounding happens in-plan with ``F.round`` so both engines
+    replay one op order)."""
+    from .._core.batch import segment_intersect_counts
+
+    la, lb = oa[1:] - oa[:-1], ob[1:] - ob[:-1]
+    return _containments(segment_intersect_counts(va, la, vb, lb), la, lb)
+
+
+def _containments(ni, la, lb):
     import numpy as np
 
-    from .._core.batch import sorted_intersect_counts
-
-    la = np.fromiter((len(x) for x in va), dtype=np.int64, count=len(va))
-    lb = np.fromiter((len(x) for x in vb), dtype=np.int64, count=len(vb))
-    rows = np.arange(len(va), dtype=np.int64)
-    ka = (np.repeat(rows, la) << 32) | (
-        np.concatenate(va).astype(np.int64) & 0xFFFFFFFF
-        if la.sum() else np.empty(0, dtype=np.int64))
-    kb = (np.repeat(rows, lb) << 32) | (
-        np.concatenate(vb).astype(np.int64) & 0xFFFFFFFF
-        if lb.sum() else np.empty(0, dtype=np.int64))
-    ni = sorted_intersect_counts(ka, kb, len(va))
-    ca = np.where(la > 0, ni / np.maximum(la, 1), 0.0)
-    cb = np.where(lb > 0, ni / np.maximum(lb, 1), 0.0)
-    return ca, cb
+    return (np.where(la > 0, ni / np.maximum(la, 1), 0.0),
+            np.where(lb > 0, ni / np.maximum(lb, 1), 0.0))
 
 
 def _collect_sets_broadcast(sets: DataFrame, id_alias: str, set_alias: str):
@@ -109,21 +96,26 @@ def _collect_sets_broadcast(sets: DataFrame, id_alias: str, set_alias: str):
     but the verify kernel can then gather sets BY ID: candidate pairs
     cross the Arrow boundary as bare (id_a, id_b) rows instead of
     carrying two ~KB set payloads each — on the sf0.1 flagship that cuts
-    the UDF input from ~5 GB to ~35 MB."""
+    the UDF input from ~5 GB to ~35 MB.
+
+    Collected with ``toArrow``: the set column's offsets and values
+    buffers are reordered by id in one vectorized gather, with no
+    per-row Python object.  A NULL set (NULL text) becomes an empty
+    segment."""
     import numpy as np
 
-    pdf = sets.select(id_alias, set_alias).toPandas()
-    ids = pdf[id_alias].to_numpy(dtype=np.int64)
-    order = np.argsort(ids, kind="stable")
-    arrs = pdf[set_alias].to_numpy()[order]
-    lens = np.fromiter((len(a) for a in arrs), dtype=np.int64,
-                       count=len(arrs))
-    offsets = np.zeros(len(arrs) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    flat = (np.concatenate(arrs).astype(np.int32) if lens.sum()
-            else np.empty(0, dtype=np.int32))
+    from ..functions.lsh import _from_arrow_list
     from ..plans.cache import track_broadcast
 
+    tbl = sets.select(id_alias, set_alias).toArrow()
+    ids = tbl.column(id_alias).to_numpy().astype(np.int64, copy=False)
+    flat, offs, _ = _from_arrow_list(tbl.column(set_alias))
+    order = np.argsort(ids, kind="stable")
+    lens = (offs[1:] - offs[:-1])[order]
+    offsets = np.zeros(len(ids) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    flat = _gather_segments(flat.astype(np.int32, copy=False), offs, order,
+                            lens)
     return track_broadcast(sets.sparkSession.sparkContext.broadcast(
         (ids[order], offsets, flat)))
 
@@ -162,18 +154,39 @@ _BITMAP_MAX_BYTES = 128 << 20  # packed-matrix budget across both sides
 _BITMAP_WORDS_VS_PAIR = 0.5
 
 
-def _bitmap_pack(spark, bc_a, bc_b):
-    """Build the shared-universe packed bitmaps for a broadcast-verify
-    pair of set tables, or None when the fast path does not pay
-    (universe too wide, matrices too big, or an empty side).  Returns a
-    tracked broadcast of (bm_a, bm_b, n_words); bm_b is None when both
-    sides are the same table (the self-join ships one matrix)."""
+# exact early reject: the distinct values of a bounded prefix of each
+# side are a subset of that side's universe, so when the prefixes' common
+# universe already overflows the word budget the full one does too — a
+# natural-text shard (421k distinct values against a 30k budget) is then
+# rejected without the full ``np.unique`` over millions of set values
+_BITMAP_PREFIX = 1 << 17
+
+
+def _bitmap_fits(n_words, n_docs, mean_pair_elems) -> bool:
+    """The bitmap budget; monotone in ``n_words``, so a lower bound that
+    fails it decides the full universe too."""
+    return (n_words <= max(4, mean_pair_elems * _BITMAP_WORDS_VS_PAIR)
+            and n_docs * n_words * 8 <= _BITMAP_MAX_BYTES)
+
+
+def _common_universe(flat_a, flat_b, same: bool):
+    """Sorted distinct values present on both sides (one side when the
+    two are the same table)."""
     import numpy as np
 
-    from ..plans.cache import track_broadcast
+    uni_a = np.unique(flat_a)
+    return (uni_a if same
+            else np.intersect1d(uni_a, np.unique(flat_b), assume_unique=True))
 
-    ids_a, off_a, flat_a = bc_a.value
-    ids_b, off_b, flat_b = bc_b.value
+
+def _bitmap_plan(side_a, side_b, same: bool):
+    """(bm_a, bm_b, n_words) packed bitmaps for two flat set tables
+    ``(sorted_ids, offsets, flat)``, or None when the fast path does not
+    pay (universe too wide, matrices too big, or an empty side); bm_b is
+    None when both sides are the same table (the self-join ships one
+    matrix)."""
+    ids_a, off_a, flat_a = side_a
+    ids_b, off_b, flat_b = side_b
     if len(ids_a) == 0 or len(ids_b) == 0:
         return None
     # driver-side guard: the unique/searchsorted passes below are one
@@ -181,22 +194,34 @@ def _bitmap_pack(spark, bc_a, bc_b):
     # path when the collected tables are already huge
     if flat_a.shape[0] + flat_b.shape[0] > 64_000_000:
         return None
-    uni_a = np.unique(flat_a)
-    common = (uni_a if bc_a is bc_b
-              else np.intersect1d(uni_a, np.unique(flat_b),
-                                  assume_unique=True))
-    n_words = (common.shape[0] + 63) // 64
+    n_docs = len(ids_a) + len(ids_b)
     mean_pair_elems = (flat_a.shape[0] / len(ids_a)
                        + flat_b.shape[0] / len(ids_b))
-    if n_words > max(4, mean_pair_elems * _BITMAP_WORDS_VS_PAIR):
-        return None
-    if (len(ids_a) + len(ids_b)) * n_words * 8 > _BITMAP_MAX_BYTES:
+    p = _BITMAP_PREFIX
+    if flat_a.shape[0] > p or (not same and flat_b.shape[0] > p):
+        head = _common_universe(flat_a[:p], flat_b[:p], same)
+        if not _bitmap_fits((head.shape[0] + 63) // 64, n_docs,
+                            mean_pair_elems):
+            return None
+    common = _common_universe(flat_a, flat_b, same)
+    n_words = (common.shape[0] + 63) // 64
+    if not _bitmap_fits(n_words, n_docs, mean_pair_elems):
         return None
     bm_a = _bitmap_pack_side(flat_a, off_a, common, n_words)
-    bm_b = (None if bc_a is bc_b
-            else _bitmap_pack_side(flat_b, off_b, common, n_words))
-    return track_broadcast(
-        spark.sparkContext.broadcast((bm_a, bm_b, n_words)))
+    bm_b = None if same else _bitmap_pack_side(flat_b, off_b, common, n_words)
+    return bm_a, bm_b, n_words
+
+
+def _bitmap_pack(spark, bc_a, bc_b):
+    """Build the shared-universe packed bitmaps for a broadcast-verify
+    pair of set tables (``_bitmap_plan``) and broadcast them (tracked),
+    or None when the fast path does not pay."""
+    from ..plans.cache import track_broadcast
+
+    plan = _bitmap_plan(bc_a.value, bc_b.value, bc_a is bc_b)
+    if plan is None:
+        return None
+    return track_broadcast(spark.sparkContext.broadcast(plan))
 
 
 def _bitmap_pack_side(flat, off, common, n_words):
@@ -259,6 +284,59 @@ def _fanout_pairs(pairs: DataFrame) -> DataFrame:
     return pairs.repartition(target)
 
 
+def _lookup_ids(ids, wanted):
+    """searchsorted + membership mask over sorted broadcast ids:
+    (index, found) pairs."""
+    import numpy as np
+
+    idx = np.searchsorted(ids, wanted)
+    idx = np.minimum(idx, max(len(ids) - 1, 0))
+    found = (ids[idx] == wanted) if len(ids) else np.zeros(
+        len(wanted), dtype=bool)
+    return idx, found
+
+
+def _id_values(col):
+    """An integer id column of a record batch as int64 numpy."""
+    import numpy as np
+
+    return col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+
+
+def _gathered_counts(side_a, side_b, ia, ib, la, lb, bm_a, bm_b):
+    """|A∩B| per (ia, ib) row pair of two flat broadcast set tables:
+    AND + popcount over the packed bitmaps when present, else the
+    row-tagged merge over the sets gathered by index."""
+    from .._core.batch import bitmap_intersect_counts, segment_intersect_counts
+
+    if bm_a is not None:
+        return bitmap_intersect_counts(bm_a, bm_b, ia, ib)
+    _, off_a, flat_a = side_a
+    _, off_b, flat_b = side_b
+    return segment_intersect_counts(
+        _gather_segments(flat_a, off_a, ia, la), la,
+        _gather_segments(flat_b, off_b, ib, lb), lb)
+
+
+def _bitmaps(bc_bm):
+    """(bm_a, bm_b) from a tracked bitmap broadcast, or (None, None)."""
+    if bc_bm is None:
+        return None, None
+    bm_a, bm_b, _ = bc_bm.value
+    return bm_a, (bm_a if bm_b is None else bm_b)  # self-join: one matrix
+
+
+def _with_columns(rb, sel, names, extra):
+    """Rows ``sel`` of the record batch's leading columns, plus ``extra``
+    float columns — the kernels' output batch."""
+    import pyarrow as pa
+
+    take = pa.array(sel)
+    cols = [rb.column(i).take(take) for i in range(len(names) - len(extra))]
+    return pa.RecordBatch.from_arrays(
+        cols + [pa.array(x) for x in extra], names=names)
+
+
 def _verify_pairs_from_broadcast(pairs: DataFrame, id_a: str, id_b: str,
                                  bc_a, bc_b, threshold: float,
                                  out_sim: str) -> DataFrame:
@@ -273,8 +351,6 @@ def _verify_pairs_from_broadcast(pairs: DataFrame, id_a: str, id_b: str,
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from .._core.batch import bitmap_intersect_counts, sorted_intersect_counts
-
     bc_bm = (_bitmap_pack(pairs.sparkSession, bc_a, bc_b)
              if _USE_BITMAP_VERIFY else None)
     src = _fanout_pairs(pairs.select(id_a, id_b))
@@ -283,29 +359,16 @@ def _verify_pairs_from_broadcast(pairs: DataFrame, id_a: str, id_b: str,
         StructField(out_sim, DoubleType(), True),
     ])
 
-    def lookup(ids, wanted):
-        """searchsorted + membership mask: (index, found) pairs."""
-        idx = np.searchsorted(ids, wanted)
-        idx = np.minimum(idx, max(len(ids) - 1, 0))
-        found = (ids[idx] == wanted) if len(ids) else np.zeros(
-            len(wanted), dtype=bool)
-        return idx, found
-
     def verify(batches):
-        ids_a, off_a, flat_a = bc_a.value
-        ids_b, off_b, flat_b = bc_b.value
-        bm_a = bm_b = None
-        if bc_bm is not None:
-            bm_a, bm_b, _ = bc_bm.value
-            if bm_b is None:  # self-join: one shared matrix
-                bm_b = bm_a
-        for pdf in batches:
-            if not len(pdf):
+        side_a, side_b = bc_a.value, bc_b.value
+        bm_a, bm_b = _bitmaps(bc_bm)
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            ia, fa = lookup(ids_a, pdf[id_a].to_numpy(dtype=np.int64))
-            ib, fb = lookup(ids_b, pdf[id_b].to_numpy(dtype=np.int64))
-            la = off_a[ia + 1] - off_a[ia]
-            lb = off_b[ib + 1] - off_b[ib]
+            ia, fa = _lookup_ids(side_a[0], _id_values(rb.column(0)))
+            ib, fb = _lookup_ids(side_b[0], _id_values(rb.column(1)))
+            la = side_a[1][ia + 1] - side_a[1][ia]
+            lb = side_b[1][ib + 1] - side_b[1][ib]
             # exact size-ratio prune: jaccard > t needs
             # min(|A|,|B|) > t*max(|A|,|B|) — zero false negatives;
             # ids missing from the broadcast behave like the join path
@@ -314,34 +377,26 @@ def _verify_pairs_from_broadcast(pairs: DataFrame, id_a: str, id_b: str,
                   & (np.minimum(la, lb) > threshold * np.maximum(la, lb)))
             if not ok.any():
                 continue
-            ia, ib, la, lb = ia[ok], ib[ok], la[ok], lb[ok]
-            n = len(ia)
-            if bm_a is not None:
-                ni = bitmap_intersect_counts(bm_a, bm_b, ia, ib)
-            else:
-                rows = np.arange(n, dtype=np.int64)
-                ka = (np.repeat(rows, la) << 32) | (
-                    _gather_segments(flat_a, off_a, ia, la).astype(np.int64)
-                    & 0xFFFFFFFF)
-                kb = (np.repeat(rows, lb) << 32) | (
-                    _gather_segments(flat_b, off_b, ib, lb).astype(np.int64)
-                    & 0xFFFFFFFF)
-                ni = sorted_intersect_counts(ka, kb, n)
+            sel = np.flatnonzero(ok)
+            ia, ib, la, lb = ia[sel], ib[sel], la[sel], lb[sel]
+            ni = _gathered_counts(side_a, side_b, ia, ib, la, lb, bm_a, bm_b)
             union = la + lb - ni
             j = np.where(union > 0, ni / np.maximum(union, 1), 0.0)
             keep = j > threshold
-            out = pdf.loc[ok, [id_a, id_b]].iloc[keep].copy()
-            out[out_sim] = j[keep]
-            yield out
+            yield _with_columns(rb, sel[keep], [id_a, id_b, out_sim],
+                                [j[keep]])
 
-    return src.mapInPandas(verify, schema=schema)
+    return src.mapInArrow(verify, schema=schema)
 
 
 def _verify_pairs(joined: DataFrame, id_a: str, id_b: str, set_a: str,
                   set_b: str, threshold: float, out_sim: str) -> DataFrame:
     """One-pass exact verification: (ids, sets) rows → surviving
     (id_a, id_b, jaccard > threshold) rows."""
+    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from ..functions.lsh import _from_arrow_list
 
     src = joined.select(id_a, id_b, set_a, set_b)
     schema = StructType([
@@ -350,16 +405,16 @@ def _verify_pairs(joined: DataFrame, id_a: str, id_b: str, set_a: str,
     ])
 
     def verify(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            j = _batch_jaccard(list(pdf[set_a]), list(pdf[set_b]))
-            keep = j > threshold
-            out = pdf.loc[keep, [id_a, id_b]].copy()
-            out[out_sim] = j[keep]
-            yield out
+            va, oa, _ = _from_arrow_list(rb.column(2))
+            vb, ob, _ = _from_arrow_list(rb.column(3))
+            j = _batch_jaccard(va, oa, vb, ob)
+            keep = np.flatnonzero(j > threshold)
+            yield _with_columns(rb, keep, [id_a, id_b, out_sim], [j[keep]])
 
-    return src.mapInPandas(verify, schema=schema)
+    return src.mapInArrow(verify, schema=schema)
 
 
 # verification joins re-attach the ~KB shingle-set payload to every
@@ -693,20 +748,23 @@ def _containment_schema(src):
 def _containment_from_attached(joined: DataFrame) -> DataFrame:
     """(ids, sets) rows → raw (id_a, id_b, __ca, __cb) — the
     past-the-cap shuffle path."""
+    import numpy as np
+
+    from ..functions.lsh import _from_arrow_list
+
     src = joined.select("id_a", "id_b", "__set_a", "__set_b")
 
     def verify(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            ca, cb = _batch_containment(
-                list(pdf["__set_a"]), list(pdf["__set_b"]))
-            out = pdf[["id_a", "id_b"]].copy()
-            out["__ca"] = ca
-            out["__cb"] = cb
-            yield out
+            va, oa, _ = _from_arrow_list(rb.column(2))
+            vb, ob, _ = _from_arrow_list(rb.column(3))
+            ca, cb = _batch_containment(va, oa, vb, ob)
+            yield _with_columns(rb, np.arange(rb.num_rows),
+                                ["id_a", "id_b", "__ca", "__cb"], [ca, cb])
 
-    return src.mapInPandas(
+    return src.mapInArrow(
         verify, schema=_containment_schema(src.select("id_a", "id_b")))
 
 
@@ -717,54 +775,32 @@ def _containment_from_broadcast(pairs: DataFrame, bc) -> DataFrame:
     drops the pair, mirroring the inner attach-join)."""
     import numpy as np
 
-    from .._core.batch import bitmap_intersect_counts, sorted_intersect_counts
-
     bc_bm = (_bitmap_pack(pairs.sparkSession, bc, bc)
              if _USE_BITMAP_VERIFY else None)
     src = _fanout_pairs(pairs.select("id_a", "id_b"))
     schema = _containment_schema(src)
 
-    def lookup(ids, wanted):
-        idx = np.searchsorted(ids, wanted)
-        idx = np.minimum(idx, max(len(ids) - 1, 0))
-        found = (ids[idx] == wanted) if len(ids) else np.zeros(
-            len(wanted), dtype=bool)
-        return idx, found
-
     def verify(batches):
-        ids, off, flat = bc.value
-        bm = None
-        if bc_bm is not None:
-            bm, _, _ = bc_bm.value  # self table: one shared matrix
-        for pdf in batches:
-            if not len(pdf):
+        side = bc.value
+        ids, off, _ = side
+        bm_a, bm_b = _bitmaps(bc_bm)
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            ia, fa = lookup(ids, pdf["id_a"].to_numpy(dtype=np.int64))
-            ib, fb = lookup(ids, pdf["id_b"].to_numpy(dtype=np.int64))
+            ia, fa = _lookup_ids(ids, _id_values(rb.column(0)))
+            ib, fb = _lookup_ids(ids, _id_values(rb.column(1)))
             ok = fa & fb
             if not ok.any():
                 continue
-            ia, ib = ia[ok], ib[ok]
+            sel = np.flatnonzero(ok)
+            ia, ib = ia[sel], ib[sel]
             la = off[ia + 1] - off[ia]
             lb = off[ib + 1] - off[ib]
-            n = len(ia)
-            if bm is not None:
-                ni = bitmap_intersect_counts(bm, bm, ia, ib)
-            else:
-                rows = np.arange(n, dtype=np.int64)
-                ka = (np.repeat(rows, la) << 32) | (
-                    _gather_segments(flat, off, ia, la).astype(np.int64)
-                    & 0xFFFFFFFF)
-                kb = (np.repeat(rows, lb) << 32) | (
-                    _gather_segments(flat, off, ib, lb).astype(np.int64)
-                    & 0xFFFFFFFF)
-                ni = sorted_intersect_counts(ka, kb, n)
-            out = pdf.loc[ok, ["id_a", "id_b"]].copy()
-            out["__ca"] = np.where(la > 0, ni / np.maximum(la, 1), 0.0)
-            out["__cb"] = np.where(lb > 0, ni / np.maximum(lb, 1), 0.0)
-            yield out
+            ni = _gathered_counts(side, side, ia, ib, la, lb, bm_a, bm_b)
+            yield _with_columns(rb, sel, ["id_a", "id_b", "__ca", "__cb"],
+                                list(_containments(ni, la, lb)))
 
-    return src.mapInPandas(verify, schema=schema)
+    return src.mapInArrow(verify, schema=schema)
 
 
 def lsh_edit_distance_pairs(

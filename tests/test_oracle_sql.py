@@ -128,5 +128,13 @@ def test_batch_jaccard_matches_naive_sets():
         sa, sb = set(a.tolist()), set(b.tolist())
         u = len(sa | sb)
         want.append(len(sa & sb) / u if u else 0.0)
-    got = _batch_jaccard(va, vb)
+    got = _batch_jaccard(*_flat(va), *_flat(vb))
     assert np.allclose(got, want, rtol=0, atol=0)
+
+
+def _flat(rows):
+    """Per-row int32 arrays → (flat values, row offsets), the layout the
+    verify kernels read from an Arrow list column."""
+    offs = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum([len(r) for r in rows], out=offs[1:])
+    return np.concatenate(rows).astype(np.int32), offs

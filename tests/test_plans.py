@@ -165,7 +165,7 @@ def test_ivf_centroid_side_broadcast(spark):
 def test_verification_is_single_python_pass(spark):
     """Regression guard for the double-eval bug: Catalyst predicate
     pushdown used to substitute the jaccard UDF into the threshold filter,
-    evaluating verification twice per pair.  The mapInPandas verify must
+    evaluating verification twice per pair.  The mapInArrow verify must
     appear exactly once, with no ArrowEvalPython jaccard twin."""
     import re
 
@@ -177,7 +177,7 @@ def test_verification_is_single_python_pass(spark):
                               band_count=8, band_size=2, seed=123,
                               threshold=0.6)
     plan = _plan(df)
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
 
 
 def test_plan_construction_runs_no_jobs(spark):
@@ -223,7 +223,7 @@ def test_set_reattach_is_size_gated(spark):
     # sf0.001 sets are ~100 KB -> under the cap -> kernel path: the only
     # join in the plan is the band-blocking join, sets never re-attach
     plan = _plan(query())
-    assert "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan
     assert "__set_a" not in plan and "__set_b" not in plan
 
     # shrink the cap below any real corpus -> attach path with
@@ -365,7 +365,7 @@ def test_broadcast_kernel_verify_has_no_attach_joins(spark):
         plan, re.M))
     assert n_joins == 1, f"expected only the band join, got {n_joins}"
     # the sets never re-attach: the verify stage is a bare-ids Python map
-    assert "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def _single_partition_inputs(plan: str) -> list[str]:

@@ -402,7 +402,12 @@ def test_batch_containment_matches_python_sets():
         ni = len(set(sa) & set(sb))
         expect.append((ni / len(sa) if sa else 0.0,
                        ni / len(sb) if sb else 0.0))
-    ca, cb = _batch_containment(va, vb)
+    def flat(rows):
+        offs = np.zeros(len(rows) + 1, dtype=np.int64)
+        np.cumsum([len(r) for r in rows], out=offs[1:])
+        return np.concatenate(rows).astype(np.int32), offs
+
+    ca, cb = _batch_containment(*flat(va), *flat(vb))
     assert list(ca) == [e[0] for e in expect]
     assert list(cb) == [e[1] for e in expect]
 
